@@ -117,17 +117,12 @@ def main(argv: list[str] | None = None) -> dict:
         if owns_session:
             spark.stop()
         return summary
-    has_store = os.path.exists(
-        os.path.join(args.store, "signatures", "manifest.json")
-    )
+    has_store = io.exists("signatures")
     # A store in the pre-unification digests/sketches layout must fail
     # LOUDLY: treating it as empty would silently re-keep every
     # committed duplicate and start a fresh history beside the stale one.
     if not has_store:
-        legacy = [
-            t for t in ("digests", "sketches")
-            if os.path.exists(os.path.join(args.store, t, "manifest.json"))
-        ]
+        legacy = [t for t in ("digests", "sketches") if io.exists(t)]
         if legacy:
             raise SystemExit(
                 f"store {args.store!r} uses the removed two-table layout "

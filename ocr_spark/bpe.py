@@ -268,10 +268,17 @@ def bpe_encode(
         )
         .join(vocab, on="piece", how="left")
     )
-    # the unknown-piece guard rides INSIDE n_tokens (CaseWhen branches
-    # evaluate lazily per row): a standalone guard column would be
-    # pruned away with its raise_error by Catalyst the moment a caller
-    # selects past it
+    # the unknown-piece guard rides INSIDE both output columns (CaseWhen
+    # branches evaluate lazily per row): a standalone guard column — or
+    # a guard in one column only — would be pruned away with its
+    # raise_error by Catalyst the moment a caller selects past it
+    unknown = F.col("_unknown") > 0
+    missing = F.raise_error(F.concat(
+        F.lit("bpe_encode: pieces missing from the vocab for doc id "),
+        F.col("id").cast("string"),
+        F.lit(" — encode with a vocab built over this corpus "
+              "(bpe_vocab) or a superset"),
+    ))
     return (
         per_piece.groupBy("id")
         .agg(
@@ -284,19 +291,13 @@ def bpe_encode(
         )
         .select(
             "id",
-            F.when(
-                F.col("_unknown") > 0,
-                F.raise_error(F.concat(
-                    F.lit("bpe_encode: pieces missing from the vocab "
-                          "for doc id "),
-                    F.col("id").cast("string"),
-                    F.lit(" — encode with a vocab built over this "
-                          "corpus (bpe_vocab) or a superset"),
-                )).cast("bigint"),
-            ).otherwise(
-                F.size("_ordered").cast("bigint")
-            ).alias("n_tokens"),
-            F.transform(F.col("_ordered"), lambda s: s["piece_id"])
+            F.when(unknown, missing.cast("bigint"))
+            .otherwise(F.size("_ordered").cast("bigint"))
+            .alias("n_tokens"),
+            F.when(unknown, missing.cast("array<bigint>"))
+            .otherwise(
+                F.transform(F.col("_ordered"), lambda s: s["piece_id"])
+            )
             .alias("piece_ids"),
         )
     )

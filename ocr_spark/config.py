@@ -19,15 +19,6 @@ class PipelineConfig:
       overruns quarantine the span instead of killing anything — the
       distributed analogue of the reference's per-request process kill
       (main.py:1211-1256, OCR_TIMEOUT_SECONDS=30 main.py:123).
-    - ``salt_buckets``: salt cardinality appended to the doc_id hash when
-      repartitioning media spans, so a single media-heavy document spreads
-      over up to ``salt_buckets`` shuffle partitions.  Hash placement of
-      the salted keys is collision-prone (measured 4-of-16 keys landing in
-      one partition), so size this ≥ 4× the per-doc parallelism you
-      actually need and keep shuffle partitions ≥ 4× salt_buckets.
-    - ``media_partitions`` / ``text_partitions``: the two paths are
-      repartitioned separately (media partitions sized for model batch
-      memory, text partitions for cheap CPU); ``None`` → leave to AQE.
     - ``strip_html``: the boilerplate-strip stage for text spans; turn off
       for the raw-passthrough profile.
     """
@@ -35,9 +26,6 @@ class PipelineConfig:
     recognizer_backend: str = "fake"
     ref_year: int = REF_YEAR
     media_time_budget_s: float = 30.0
-    salt_buckets: int = 16
-    media_partitions: int | None = None
-    text_partitions: int | None = None
     strip_html: bool = True
     # Fixed sha256 iterations per image for the fake backend (scaling
     # benchmarks emulate real inference cost with it; ~2000 ≈ 1 ms);

@@ -29,7 +29,7 @@ primitive:
    verify work, resolved by the exact join), never false negatives
    (which would admit duplicates).  The safe over-approximation is why
    the registry is written first.  The registry ⊇ store invariant is
-   ENFORCED at both edges (round 5): enabling the registry on a
+   ENFORCED at both edges: enabling the registry on a
    pre-existing store first backfills every committed digest (one pass,
    once per store lifetime), and a batch run with the registry disabled
    against a store that has one is REFUSED — either hole would let a
@@ -44,7 +44,9 @@ primitive:
 
 A crash at any point therefore converges on retry: before (4) the store
 is unchanged, so the recomputed kept-set is identical and the docs
-overwrite is idempotent; after (4) the tag short-circuits.
+overwrite is idempotent; after (4) the tag short-circuits.  Both exact
+modes — ``(doc_id, text)`` rows and extracted span sequences — run this
+order through the one function :func:`_dedup_commit`.
 
 Scale shape: per batch, one groupBy(digest) over the BATCH only, one
 digest-keyed join of batch digests against the store probe (Bloom-pruned
@@ -87,18 +89,88 @@ def ingest_batch(
     """Process ONE micro-batch of ``(doc_id, text)`` rows — the
     foreachBatch body of :func:`run_stream_dedup_ingest`, callable
     directly for batch-mode ingest.  Returns a stats dict
-    (``replayed`` True when the tag short-circuit fired).
+    (``replayed`` True when the tag short-circuit fired; ``docs_in``
+    counts the rows with non-NULL text).
 
     ``registry_m_bits`` enables the Bloom-registry prune: size it at
     ~12 bits per EXPECTED TOTAL corpus doc (the membership module's
     m/n ≈ 12 → fpp ≈ 0.6% guidance) — the geometry is fixed at table
     creation and cannot be grown later.
     """
-    tag = f"{stream_id}/b{batch_id:06d}"
     t0 = time.monotonic()
+    tag = _batch_tag(stream_id, batch_id)
+    done = _dedup_commit(
+        spark, docs, F.col("text"), batch_id, io, out_dir, tag,
+        store_table, registry_m_bits, enforce_disjoint_ids,
+    )
+    if done is None:
+        return _replayed(batch_id, tag)
+    snap, n_in, n_kept, n_pruned = done
+    return {
+        "batch_id": batch_id,
+        "tag": tag,
+        "replayed": False,
+        "snapshot": snap,
+        "docs_in": n_in,
+        "docs_kept": n_kept,
+        "docs_dropped": n_in - n_kept,
+        "registry_survivors": n_pruned,
+        "wall_s": round(time.monotonic() - t0, 3),
+    }
+
+
+def _batch_tag(stream_id: str, batch_id: int) -> str:
+    return f"{stream_id}/b{batch_id:06d}"
+
+
+def _replayed(batch_id: int, tag: str) -> dict:
+    return {"batch_id": batch_id, "tag": tag, "replayed": True}
+
+
+def _write_batch_partition(df: DataFrame, batch_id: int, out_dir: str):
+    """``df`` into ``out_dir``'s ``batch_id`` partition by dynamic
+    overwrite: a replayed foreachBatch rewrites its partition rather
+    than duplicating it."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(out_dir)
+    )
+
+
+def _dedup_commit(
+    spark: SparkSession,
+    docs: DataFrame,
+    content: Column,
+    batch_id: int,
+    io: ParquetManifestIO,
+    out_dir: str,
+    tag: str,
+    store_table: str,
+    registry_m_bits: int | None,
+    enforce_disjoint_ids: bool,
+):
+    """The exact-dedup commit of one batch, in the order the module
+    docstring proves exactly-once: ``docs`` (keyed by ``doc_id``) are
+    deduplicated on the digest of ``content``, a Column over ``docs``,
+    against the committed ``store_table``; the kept rows land in
+    ``out_dir``'s batch partition and their digests commit under
+    ``tag``.  Rows whose ``content`` is NULL have no digest
+    (:func:`exact_digests` excludes them to avoid a bogus NULL-digest
+    group) — they ride through unscreened rather than vanish:
+    content-less rows can't be duplicates, and dropping data silently
+    is never this pipeline's job.
+
+    Returns None when the batch already committed (its tag is in the
+    store), else ``(snapshot, digested rows, kept rows, registry
+    survivors)``; the survivor count is None without a registry prune.
+    """
     if tag in io.tags(store_table):
-        return {"batch_id": batch_id, "tag": tag, "replayed": True}
-    if registry_m_bits is None and _registry_exists(io, store_table):
+        return None
+    registry = _registry_table(store_table)
+    if registry_m_bits is None and io.exists(registry):
         # toggle-off guard: this store HAS a registry, and a batch
         # committed without appending to it would punch false-NEGATIVE
         # holes (probes would prune committed digests this batch adds)
@@ -106,8 +178,8 @@ def ingest_batch(
         # prune is optional; keeping the registry complete is not.
         raise ValueError(
             f"store table {store_table!r} has a Bloom registry "
-            f"({_registry_table(store_table)!r}) but this run disabled "
-            "it (registry_m_bits=None); committing a batch without the "
+            f"({registry!r}) but this run disabled it "
+            "(registry_m_bits=None); committing a batch without the "
             "registry append would admit future duplicates — pass the "
             "registry geometry, or drop the registry table explicitly"
         )
@@ -118,22 +190,22 @@ def ingest_batch(
     # registry reads are designed failure paths, and a driver that
     # catches per-batch errors and continues must not accrete one
     # leaked cache per failed batch.
-    new_digests = exact_digests(docs).persist()
-    n_pruned = None
-    survivors_cache = None
+    new_digests = exact_digests(
+        docs.select("doc_id", content.alias("text"))
+    ).persist()
+    kept_ids = survivors_cache = n_pruned = None
     try:
-        committed = None
-        try:
-            committed = io.read(spark, store_table)
-        except FileNotFoundError:
-            pass  # first batch ever — nothing committed yet
-
+        committed = (
+            io.read(spark, store_table) if io.exists(store_table) else None
+        )
         if committed is not None:
             if enforce_disjoint_ids:
                 # same precondition + fail-fast as
                 # jobs/run_dedup_incremental: a batch re-submitting
-                # committed ids under a NEW tag would double-commit
-                # digests and corrupt first-run-wins semantics.
+                # committed ids under a NEW tag (e.g. span files
+                # re-dropped under new names — the checkpoint skips
+                # FILES, not content) would double-commit digests and
+                # corrupt first-run-wins semantics.
                 overlap = (
                     new_digests.select("id")
                     .join(committed.select("id"), on="id", how="left_semi")
@@ -150,7 +222,7 @@ def ingest_batch(
                         "not by resubmitting ids under a new tag"
                     )
             if registry_m_bits is not None:
-                if not _registry_exists(io, store_table):
+                if not io.exists(registry):
                     # registry enabled on a PRE-EXISTING store: back-
                     # fill every committed digest first, or the probe
                     # would report false negatives for them and admit
@@ -169,11 +241,7 @@ def ingest_batch(
 
         verdict = exact_duplicates_incremental(new_digests, committed)
         kept_ids = verdict.filter(F.col("kept")).select("id").persist()
-        # NULL-text rows have no digest (exact_digests excludes them to
-        # avoid a bogus NULL-digest group) — they ride through unscreened
-        # rather than vanish: content-less rows can't be duplicates, and
-        # dropping data silently is never this pipeline's job.
-        kept_docs = docs.filter(F.col("text").isNull()).unionByName(
+        kept_docs = docs.filter(content.isNull()).unionByName(
             docs.join(
                 kept_ids.withColumnRenamed("id", "doc_id"),
                 on="doc_id", how="left_semi",
@@ -186,13 +254,7 @@ def ingest_batch(
             # future probes get false positives, never false negatives)
             _registry_append(io, new_digests, store_table, registry_m_bits)
 
-        (
-            kept_docs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(kept_docs, batch_id, out_dir)
 
         # commit point: kept rows only (keeps the store digest-unique by
         # construction — the probe's defensive distinct never multiplies)
@@ -204,40 +266,15 @@ def ingest_batch(
         except DuplicateTagError:
             # a racing replay won the lock between our tags() check and
             # the append; its docs overwrite carried the same content
-            return {"batch_id": batch_id, "tag": tag, "replayed": True}
-
-        n_in = new_digests.count()  # digestable (non-NULL-text) rows
-        n_kept = kept_ids.count()
-        return {
-            "batch_id": batch_id,
-            "tag": tag,
-            "replayed": False,
-            "snapshot": snap,
-            "docs_in": n_in,
-            "docs_kept": n_kept,
-            "docs_dropped": n_in - n_kept,
-            "registry_survivors": n_pruned,
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
+            return None
+        return snap, new_digests.count(), kept_ids.count(), n_pruned
     finally:
         new_digests.unpersist()
-        try:
+        if kept_ids is not None:
             kept_ids.unpersist()
-        except NameError:
-            pass
         if survivors_cache is not None:
             survivors_cache.unpersist()  # one cache per BATCH — a
             # continuous stream would otherwise accrete one forever
-
-
-def _registry_exists(io, store_table: str) -> bool:
-    """Whether the store's Bloom registry table has ever committed —
-    manifest presence, the same existence probe the store tables use."""
-    import os
-
-    return os.path.exists(os.path.join(
-        io.root, _registry_table(store_table), "manifest.json"
-    ))
 
 
 def _registry_table(store_table: str) -> str:
@@ -279,14 +316,7 @@ def _registry_prune(
     )
 
     m, k = m_bits, DEFAULT_K
-    try:
-        bitmap = bloom_store_read(
-            io, spark, _registry_table(store_table), m, k
-        )
-    except FileNotFoundError:
-        # registry table not yet created (e.g. enabled on an existing
-        # store): no prune this batch; the append below creates it
-        return committed, None, None
+    bitmap = bloom_store_read(io, spark, _registry_table(store_table), m, k)
     probed = bloom_probe(
         _registry_key(new_digests).distinct(), bitmap, "g", m, k
     )
@@ -314,8 +344,10 @@ def _start_ingest_stream(
     max_files_per_trigger: int,
 ):
     """Shared readStream → foreachBatch → checkpoint scaffolding of the
-    three ingest entry points — one definition so a stream option or
-    trigger change cannot be applied to two of the three and drift."""
+    three ingest entry points and
+    :func:`ocr_spark.streaming.run_streaming_extraction` — one
+    definition so a stream option or trigger change cannot be applied
+    to some of them and drift."""
     writer = (
         spark.readStream.schema(schema_ddl)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -406,17 +438,15 @@ def neardup_ingest_batch(
     """
     from ocr_spark.dedup import incremental_signature_delta
 
-    tag = f"{stream_id}/b{batch_id:06d}"
+    tag = _batch_tag(stream_id, batch_id)
     t0 = time.monotonic()
     if tag in io.tags(SIGNATURES_TABLE):
-        return {"batch_id": batch_id, "tag": tag, "replayed": True}
+        return _replayed(batch_id, tag)
 
-    committed = None
-    try:
-        committed = io.read(spark, SIGNATURES_TABLE)
-    except FileNotFoundError:
-        pass
-
+    committed = (
+        io.read(spark, SIGNATURES_TABLE)
+        if io.exists(SIGNATURES_TABLE) else None
+    )
     delta = incremental_signature_delta(docs, committed, threshold)
     try:
         labeled = docs.filter(F.col("text").isNull()).withColumn(
@@ -429,27 +459,15 @@ def neardup_ingest_batch(
                 on="doc_id",
             )
         )
-        (
-            labeled.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/docs")
-        )
-        (
-            delta["pairs"].withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir}/pairs")
-        )
+        _write_batch_partition(labeled, batch_id, f"{out_dir}/docs")
+        _write_batch_partition(delta["pairs"], batch_id, f"{out_dir}/pairs")
 
         try:
             snap = io.append(
                 delta["store_rows"], SIGNATURES_TABLE, tag=tag
             )
         except DuplicateTagError:
-            return {"batch_id": batch_id, "tag": tag, "replayed": True}
+            return _replayed(batch_id, tag)
 
         counts = delta["exact"].agg(
             F.count(F.lit(1)).alias("n_new"),
@@ -539,10 +557,10 @@ def serialized_spans(spans_out: Column) -> Column:
     must not collapse into one bogus ''-digest group (they ride through
     unscreened, like NULL-text rows in :func:`ingest_batch`).
 
-    Framing v2 (round 5): digests differ from the unframed v1 encoding
-    — a store written by v1 must be rebuilt before running under v2, or
-    v1-era content would re-keep once (content identity only holds
-    within one framing version).
+    Framing v2: digests differ from the unframed v1 encoding — a store
+    written by v1 must be rebuilt before running under v2, or v1-era
+    content would re-keep once (content identity only holds within one
+    framing version).
     """
     ser = F.array_join(
         F.transform(
@@ -588,77 +606,28 @@ def extract_ingest_batch(
        ``batch_id``-partitioned dynamic-overwrite output;
     4. the batch's digests commit as ONE tagged snapshot.
 
-    Same crash-window convergence as :func:`ingest_batch`.  Documents
-    with EMPTY ``spans_out`` (quarantined/oversized/genuinely empty)
-    ride through unscreened — no content, no dedup, never dropped.
+    Same crash-window convergence as :func:`ingest_batch` — the same
+    commit path (:func:`_dedup_commit`), keyed on the serialized span
+    sequence.  Documents with EMPTY ``spans_out`` (quarantined/oversized/
+    genuinely empty) ride through unscreened — no content, no dedup,
+    never dropped.  ``docs_in`` counts every extracted document;
+    ``docs_empty`` the unscreened ones.
     """
-    tag = f"{stream_id}/b{batch_id:06d}"
-    t0 = time.monotonic()
-    if tag in io.tags(store_table):
-        return {"batch_id": batch_id, "tag": tag, "replayed": True}
-
     from ocr_spark.pipeline import run_extraction
 
+    t0 = time.monotonic()
+    tag = _batch_tag(stream_id, batch_id)
+    # lazy: a replayed batch returns before any extraction job runs
     docs = run_extraction(spark, spans_df, media_df, cfg).persist()
     try:
-        keyed = docs.select(
-            "doc_id", serialized_spans(F.col("spans_out")).alias("text")
+        done = _dedup_commit(
+            spark, docs, serialized_spans(F.col("spans_out")), batch_id,
+            io, out_dir, tag, store_table, None, enforce_disjoint_ids,
         )
-        new_digests = exact_digests(keyed, "text", "doc_id").persist()
-
-        committed = None
-        try:
-            committed = io.read(spark, store_table)
-        except FileNotFoundError:
-            pass
-
-        if committed is not None and enforce_disjoint_ids:
-            # same precondition + fail-fast as ingest_batch: spans for
-            # an already-committed doc_id re-dropped under new file
-            # names (the checkpoint skips FILES, not content) whose
-            # extraction output changed would otherwise commit a second
-            # (id, digest) row and corrupt first-run-wins semantics
-            overlap = (
-                new_digests.select("id")
-                .join(committed.select("id"), on="id", how="left_semi")
-                .limit(3)
-                .collect()
-            )
-            if overlap:
-                raise ValueError(
-                    f"batch {batch_id}: doc ids overlap the committed "
-                    f"store (e.g. {sorted(r.id for r in overlap)}); "
-                    "each batch must carry fresh doc ids — replays of "
-                    "a committed batch are detected by TAG"
-                )
-
-        verdict = exact_duplicates_incremental(new_digests, committed)
-        kept_ids = verdict.filter(F.col("kept")).select("id").persist()
-        kept_docs = docs.join(
-            keyed.filter(F.col("text").isNull()).select("doc_id"),
-            on="doc_id", how="left_semi",
-        ).unionByName(
-            docs.join(
-                kept_ids.withColumnRenamed("id", "doc_id"),
-                on="doc_id", how="left_semi",
-            )
-        )
-        (
-            kept_docs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        kept_digest_rows = new_digests.join(kept_ids, on="id",
-                                            how="left_semi")
-        try:
-            snap = io.append(kept_digest_rows, store_table, tag=tag)
-        except DuplicateTagError:
-            return {"batch_id": batch_id, "tag": tag, "replayed": True}
+        if done is None:
+            return _replayed(batch_id, tag)
+        snap, n_digestable, n_kept, _ = done
         n_in = docs.count()
-        n_digestable = new_digests.count()
-        n_kept = kept_ids.count()
         return {
             "batch_id": batch_id,
             "tag": tag,
@@ -672,11 +641,6 @@ def extract_ingest_batch(
         }
     finally:
         docs.unpersist()
-        try:
-            new_digests.unpersist()
-            kept_ids.unpersist()
-        except NameError:
-            pass  # failed before the later persists existed
 
 
 def run_stream_extract_ingest(

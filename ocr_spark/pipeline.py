@@ -23,8 +23,8 @@ Scale notes (the design targets ~10^12 docs / 100 TB):
   help collect_list, so AQE post-shuffle coalescing + sane
   ``spark.sql.shuffle.partitions`` sizing is what bounds partition memory;
 - media spans are repartitioned *separately* from text spans, salted with
-  ``pmod(xxhash64(media_ref, offset), salt_buckets)`` so a 5,000-page
-  media-heavy document spreads over ``salt_buckets`` partitions instead of
+  ``pmod(xxhash64(media_ref, offset), SALT_BUCKETS)`` so a 5,000-page
+  media-heavy document spreads over ``SALT_BUCKETS`` partitions instead of
   hot-spotting one executor;
 - the media-store join key (media_ref) is unique and uniform, AQE skew-join
   handles residual skew;
@@ -44,6 +44,14 @@ from ocr_spark.udfs import (
     strip_boilerplate_udf,
     OCR_OUT_SCHEMA,
 )
+
+#: salt cardinality appended to the doc_id hash when repartitioning media
+#: spans, so a single media-heavy document spreads over up to this many
+#: shuffle partitions.  Hash placement of the salted keys is
+#: collision-prone (measured 4-of-16 keys landing in one partition), so
+#: it is sized ≥ 4× the per-doc parallelism actually needed; keep shuffle
+#: partitions ≥ 4× it.
+SALT_BUCKETS = 16
 
 
 def explode_spans(
@@ -140,8 +148,6 @@ def text_path(exploded: DataFrame, cfg: PipelineConfig) -> DataFrame:
     ``when`` guard) and null-in → null-out is a no-op row for the Arrow
     batch."""
     rows = exploded.filter(F.col("kind").isNull() | (F.col("kind") != "media"))
-    if cfg.text_partitions:
-        rows = rows.repartition(cfg.text_partitions, "doc_id", "offset")
     is_text = F.col("kind") == "text"  # null kind ⇒ false, like the filter
     text_in = F.when(is_text, F.col("text"))
     out_text = strip_boilerplate_udf(text_in) if cfg.strip_html else text_in
@@ -170,13 +176,13 @@ def text_path(exploded: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def _pinned_media_partitions(spark) -> int:
-    """Width for the number-pinned media exchange when the caller gave
-    no explicit ``media_partitions``: the session's shuffle parallelism.
-    Vendor platforms may set ``spark.sql.shuffle.partitions`` to a
-    non-numeric value (e.g. "auto" under auto-optimized shuffle — stock
-    Spark rejects it at set time, forks accept it), and failing
-    plan-build with ValueError there would break the whole pipeline;
-    fall back to the cluster's default parallelism instead."""
+    """Width for the number-pinned media exchange: the session's shuffle
+    parallelism.  Vendor platforms may set
+    ``spark.sql.shuffle.partitions`` to a non-numeric value (e.g. "auto"
+    under auto-optimized shuffle — stock Spark rejects it at set time,
+    forks accept it), and failing plan-build with ValueError there would
+    break the whole pipeline; fall back to the cluster's default
+    parallelism instead."""
     try:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
@@ -194,9 +200,9 @@ def media_path(
         media_df.select("media_ref", "content"), on="media_ref", how="left"
     )
 
-    # Explicit skew salting: media-heavy docs spread over salt_buckets
+    # Explicit skew salting: media-heavy docs spread over SALT_BUCKETS
     # partitions; sizing is independent of the text path.
-    salt = F.pmod(F.xxhash64("media_ref", "offset"), F.lit(cfg.salt_buckets))
+    salt = F.pmod(F.xxhash64("media_ref", "offset"), F.lit(SALT_BUCKETS))
     # The exchange width is always NUMBER-pinned: an unnumbered column
     # repartition is fair game for AQE's byte-based coalescing, and bytes
     # are a poor proxy for inference cost — measured: AQE folded ~8,300
@@ -206,12 +212,10 @@ def media_path(
     # how many executors exist).  At production scale the same mis-sizing
     # holds — an 8 MB partition of media refs can be hours of OCR — so
     # the CPU-heavy stage's width comes from the session's shuffle
-    # parallelism (or the caller's explicit media_partitions), never from
-    # AQE's byte heuristic.
-    n_media = cfg.media_partitions or _pinned_media_partitions(
-        media.sparkSession
+    # parallelism, never from AQE's byte heuristic.
+    media = media.repartition(
+        _pinned_media_partitions(media.sparkSession), F.col("doc_id"), salt
     )
-    media = media.repartition(n_media, F.col("doc_id"), salt)
 
     ocr = media.mapInPandas(
         make_ocr_batch_fn(

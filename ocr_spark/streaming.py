@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark.config import PipelineConfig
 from ocr_spark.fixtures import SPANS_SCHEMA_DDL
+from ocr_spark.ingest import _start_ingest_stream, _write_batch_partition
 from ocr_spark.pipeline import run_extraction
 
 EVENTS_STREAM_DDL = "user_id bigint, ts timestamp, event_type string, value double"
@@ -77,32 +78,18 @@ def run_streaming_extraction(
     """
     cfg = cfg or PipelineConfig()
 
-    stream = (
-        spark.readStream.schema(SPANS_SCHEMA_DDL)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(input_dir)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = run_extraction(spark, batch_df, media_df, cfg)
         # foreachBatch may replay a batch after a crash between the data
         # write and the streaming commit log; dynamic overwrite of the
         # batch_id partition makes the replay idempotent.
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+        _write_batch_partition(
+            run_extraction(spark, batch_df, media_df, cfg), batch_id, out_dir
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_ingest_stream(
+        spark, SPANS_SCHEMA_DDL, input_dir, checkpoint_dir, process_batch,
+        available_now, max_files_per_trigger=8,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_windowed_counts(

@@ -242,6 +242,16 @@ class ParquetManifestIO:
             self._commit_manifest(table, manifest)
         return snap_id
 
+    def exists(self, table: str) -> bool:
+        """Whether ``table`` has committed: the one store-existence check
+        callers use before a :meth:`read` (which raises on a table with
+        no snapshots).  A manifest is only ever written by a commit that
+        leaves at least one snapshot in it, so its presence is the test
+        — a hand-made empty manifest therefore counts as an existing
+        table, which keeps layout probes (e.g. a legacy table name)
+        seeing it."""
+        return os.path.exists(self._manifest_path(table))
+
     def tags(self, table: str) -> dict[str, int]:
         """Committed tag → snapshot id.  Snapshot ids below a compaction
         horizon are no longer readable via ``asof``, but their tags
@@ -582,18 +592,19 @@ class IcebergIO:  # pragma: no cover - needs an Iceberg catalog
     """Production backend: ``append``/``read`` against a real catalog
     (configure ``spark.sql.catalog.<name>`` with the Iceberg jar).
 
-    The TAGGED exactly-once protocol (``tags()`` / ``append(tag=)``,
-    which ingest.py's replay short-circuit depends on) is implemented on
-    the parquet-manifest backend only: the Iceberg mapping is a WAP
-    commit plus ``ALTER TABLE … CREATE TAG`` in one transaction, and
-    shipping that untestable (no catalog or jar exists in this sandbox)
-    would be a claim, not an implementation — both members raise
-    ``NotImplementedError`` naming the gap rather than letting an
-    AttributeError or a silently dropped tag masquerade as support."""
+    The TAGGED exactly-once protocol (``tags()`` / ``exists()`` /
+    ``append(tag=)``, which ingest.py's commit path depends on) is
+    implemented on the parquet-manifest backend only: the Iceberg
+    mapping is a WAP commit plus ``ALTER TABLE … CREATE TAG`` in one
+    transaction, and shipping that untestable (no catalog or jar exists
+    in this sandbox) would be a claim, not an implementation — these
+    members raise ``NotImplementedError`` naming the gap rather than
+    letting an AttributeError or a silently dropped tag masquerade as
+    support."""
 
     _TAG_GAP = (
-        "tagged (exactly-once) appends are parquet-manifest-only for "
-        "now; the Iceberg mapping is WAP + CREATE TAG in one "
+        "the tagged (exactly-once) ingest protocol is parquet-manifest-"
+        "only for now; the Iceberg mapping is WAP + CREATE TAG in one "
         "transaction and needs a real catalog to implement and test "
         "against"
     )
@@ -609,6 +620,9 @@ class IcebergIO:  # pragma: no cover - needs an Iceberg catalog
         return -1  # snapshot id available via the catalog's metadata tables
 
     def tags(self, table: str) -> dict[str, int]:
+        raise NotImplementedError(self._TAG_GAP)
+
+    def exists(self, table: str) -> bool:
         raise NotImplementedError(self._TAG_GAP)
 
     def read(self, spark: SparkSession, table: str,

@@ -271,3 +271,16 @@ def test_encode_unknown_piece_fails_loudly(spark):
     vocab = bpe_vocab(other, [])
     with pytest.raises(Exception, match="missing from the vocab"):
         bpe_encode(docs, [], vocab).collect()
+
+
+def test_encode_unknown_piece_fails_when_only_piece_ids_selected(spark):
+    """The unknown-piece guard must survive column pruning: a caller that
+    selects ``(id, piece_ids)`` past ``n_tokens`` still gets the error,
+    not silently NULL piece ids."""
+    from ocr_spark.bpe import bpe_encode, bpe_vocab
+
+    docs = _df(spark, [(1, "ab ab")], "doc_id bigint, text string")
+    other = _df(spark, [(2, "xy")], "doc_id bigint, text string")
+    vocab = bpe_vocab(other, [])
+    with pytest.raises(Exception, match="missing from the vocab"):
+        bpe_encode(docs, [], vocab).select("id", "piece_ids").collect()

@@ -6,9 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ocr_spark.config import PipelineConfig
 from ocr_spark.fixtures import fake_media_content
-from ocr_spark.pipeline import explode_spans, run_extraction
+from ocr_spark.pipeline import SALT_BUCKETS, explode_spans, run_extraction
 from ocr_spark.udfs import OCR_OUT_SCHEMA, make_ocr_batch_fn
 
 SPANS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
@@ -33,20 +32,19 @@ def _monster(spark):
 def test_salting_spreads_one_doc_across_partitions(spark):
     """Without salting, every span of one doc_id hashes to ONE partition;
     the salted repartition must spread the monster doc over (close to)
-    salt_buckets partitions."""
-    cfg = PipelineConfig(salt_buckets=16)
+    SALT_BUCKETS partitions."""
     spans_df, media_df = _monster(spark)
     media = explode_spans(spans_df).filter(
         F.col("kind") == "media"
     ).join(media_df.select("media_ref", "content"), on="media_ref")
     salt = F.pmod(
-        F.xxhash64("media_ref", "offset"), F.lit(cfg.salt_buckets)
+        F.xxhash64("media_ref", "offset"), F.lit(SALT_BUCKETS)
     )
-    # Salting guarantees up-to-salt_buckets-way spread per hot doc, SUBJECT
+    # Salting guarantees up-to-SALT_BUCKETS-way spread per hot doc, SUBJECT
     # to hash placement: Murmur3 of ("monster", 0..15) measurably piles 4
     # of the 16 keys into one of 64 partitions.  The honest invariant is
     # therefore "many partitions, biggest ≪ whole doc", with the practical
-    # rule (documented on PipelineConfig) of salt_buckets ≥ 4× the per-doc
+    # rule (documented on SALT_BUCKETS) of SALT_BUCKETS ≥ 4× the per-doc
     # parallelism actually needed.
     placed = (
         media.repartition(64, F.col("doc_id"), salt)
@@ -70,9 +68,7 @@ def test_salting_spreads_one_doc_across_partitions(spark):
 
 def test_monster_doc_round_trips_complete_and_ordered(spark):
     spans_df, media_df = _monster(spark)
-    row = run_extraction(
-        spark, spans_df, media_df, PipelineConfig(salt_buckets=16)
-    ).collect()[0]
+    row = run_extraction(spark, spans_df, media_df).collect()[0]
     assert len(row.spans_out) == N_MEDIA
     offs = [s.offset for s in row.spans_out]
     assert offs == list(range(N_MEDIA))

@@ -137,15 +137,63 @@ def test_replay_short_circuits_after_commit(spark, tmp_path):
     assert spark.read.parquet(out).count() == first["docs_kept"]
 
 
-def test_crash_before_store_commit_converges(spark, tmp_path, monkeypatch):
+def _exact_batches(spark):
+    """``ingest_batch`` over two synthetic drops: (run, batches, store
+    table, one-shot expected kept ids)."""
+    batches = [synthetic_documents(spark, 50, start=s) for s in (0, 50)]
+    return ingest_batch, batches, "digests", _expected_kept(spark, 100)
+
+
+def _extract_batches(spark):
+    """``extract_ingest_batch`` over two span drops, the second
+    re-submitting five of the first's documents under new ids: (run,
+    batches, store table, expected kept ids — None: a clean run's)."""
+    from ocr_spark.fixtures import corpus_dataframes
+    from ocr_spark.ingest import extract_ingest_batch
+
+    spans, media = corpus_dataframes(spark, seed=7, n_docs=20)
+    a = spans.filter(F.col("doc_id") < F.lit("doc_000010"))
+    resub = a.filter(F.col("doc_id") < F.lit("doc_000005")).select(
+        F.concat(F.lit("resub-"), F.col("doc_id")).alias("doc_id"), "spans"
+    )
+    b = spans.filter(F.col("doc_id") >= F.lit("doc_000010")).unionByName(
+        resub
+    )
+
+    def run(spark, docs, batch_id, io, out):
+        return extract_ingest_batch(spark, docs, media, batch_id, io, out)
+
+    return run, [a, b], "doc_digests", None
+
+
+def _kept_ids(spark, out):
+    return set(
+        r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "make", [_exact_batches, _extract_batches],
+    ids=["ingest_batch", "extract_ingest_batch"],
+)
+def test_crash_before_store_commit_converges(
+    spark, tmp_path, monkeypatch, make
+):
     """Crash window: docs partition written, store append never reached.
     The retry recomputes against the UNCHANGED store — identical
     kept-set, idempotent overwrite, single store snapshot."""
+    run, (docs0, docs1), table, expected = make(spark)
+    if expected is None:
+        clean = ParquetManifestIO(str(tmp_path / "clean_store"))
+        clean_out = str(tmp_path / "clean_out")
+        run(spark, docs0, 0, clean, clean_out)
+        run(spark, docs1, 1, clean, clean_out)
+        expected = _kept_ids(spark, clean_out)
+        assert not any(i.startswith("resub-") for i in expected)
+
     io = ParquetManifestIO(str(tmp_path / "store"))
     out = str(tmp_path / "out")
-    ingest_batch(spark, synthetic_documents(spark, 50, start=0), 0, io, out)
-
-    docs1 = synthetic_documents(spark, 50, start=50)
+    run(spark, docs0, 0, io, out)
     real_append = ParquetManifestIO.append
 
     def boom(self, df, table, tag=None):
@@ -155,16 +203,40 @@ def test_crash_before_store_commit_converges(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ParquetManifestIO, "append", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        ingest_batch(spark, docs1, 1, io, out)
+        run(spark, docs1, 1, io, out)
     monkeypatch.undo()
 
-    retry = ingest_batch(spark, docs1, 1, io, out)
+    retry = run(spark, docs1, 1, io, out)
     assert not retry["replayed"]
-    got = set(
-        r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
-    )
-    assert got == _expected_kept(spark, 100)
-    assert len(io.snapshots("digests")) == 2  # batch 0 + retried batch 1
+    assert _kept_ids(spark, out) == expected
+    assert len(io.snapshots(table)) == 2  # batch 0 + retried batch 1
+
+
+@pytest.mark.parametrize(
+    "make, jobs",
+    [(_exact_batches, 18), (_extract_batches, 27)],
+    ids=["ingest_batch", "extract_ingest_batch"],
+)
+def test_ingest_batch_spark_job_count(spark, tmp_path, make, jobs):
+    """A non-first batch runs a fixed number of Spark jobs (every job the
+    call starts, counted by job group through the status tracker): the
+    commit path's reads, guard, verdict, write, append and counts.  A
+    change to the commit path that adds or drops a pass moves this pin."""
+    run, (docs0, docs1), _, _ = make(spark)
+    io = ParquetManifestIO(str(tmp_path / "store"))
+    out = str(tmp_path / "out")
+    run(spark, docs0, 0, io, out)
+
+    sc = spark.sparkContext
+    group = f"job-count-{make.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        stats = run(spark, docs1, 1, io, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not stats["replayed"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 def test_crash_between_registry_and_store_commit_converges(
