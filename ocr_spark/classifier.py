@@ -58,6 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType
 
 from ocr_spark.similarity import hashed_token_sums
 
@@ -116,14 +117,18 @@ def _step(lr_ppm: int, grad: int, n: int) -> int:
     return mag if grad >= 0 else -mag
 
 
-def _bad_label(raw) -> F.Column:
+def _bad_label(feats: DataFrame, label_col: str) -> F.Column:
     """1 where the RAW label is not exactly 0 or 1 (NULL, 2, 0.7, …),
     else 0 — shared by training and evaluation so the fail-fast
     discipline cannot drift.  Checked BEFORE any bigint cast: casting
-    first would truncate a fractional label to a 'valid' 0."""
-    return F.when(
-        raw.isNull() | ~raw.isin(0, 1), F.lit(1)
-    ).otherwise(F.lit(0))
+    first would truncate a fractional label to a 'valid' 0.  A boolean
+    label is 0/1 by type once non-NULL (and ANSI mode refuses to
+    compare it with integers)."""
+    raw = F.col(label_col)
+    bad = raw.isNull()
+    if not isinstance(feats.schema[label_col].dataType, BooleanType):
+        bad = bad | ~raw.isin(0, 1)
+    return F.when(bad, F.lit(1)).otherwise(F.lit(0))
 
 
 def probe_features(
@@ -189,13 +194,13 @@ def train_linear_probe(
                 # validation must see the RAW column: checking after the
                 # bigint cast would let a fractional label (0.7)
                 # truncate to a "valid" 0 and silently skew training
-                F.col(label_col).alias("y_raw"),
+                _bad_label(feats, label_col).alias("bad_y"),
                 F.col(label_col).cast("bigint").alias("y"),
                 F.expr(_z_sql(w, b)).alias("z"),
             )
             .select(
                 *[F.col(f"s{j}") for j in range(dims)],
-                "y_raw",
+                "bad_y",
                 (
                     F.expr(fast_sigmoid_ppm_sql("z"))
                     - F.col("y") * F.lit(UNIT)
@@ -215,7 +220,7 @@ def train_linear_probe(
             # a non-{0,1}, fractional, or NULL label would silently
             # skew every gradient, so it fails loudly, at zero extra
             # jobs
-            aggs.append(F.sum(_bad_label(F.col("y_raw"))).alias("bad"))
+            aggs.append(F.sum("bad_y").alias("bad"))
         row = z_then_r.agg(*aggs).first()
         n = int(row["n"])
         if n == 0:
@@ -289,7 +294,7 @@ def evaluate_linear_probe(
         F.count(F.lit(1)).alias("n"),
         # same label discipline as training: a NULL/2 label would
         # silently fall out of every confusion bucket — fail loudly
-        F.sum(_bad_label(F.col(label_col))).alias("bad"),
+        F.sum(_bad_label(feats, label_col)).alias("bad"),
     ).first()
     if int(row["bad"] or 0):
         raise ValueError(
@@ -312,8 +317,9 @@ def quality_probe(
     iters: int = CONTRACT_ITERS,
     lr_ppm: int = CONTRACT_LR_PPM,
 ) -> DataFrame:
-    """Train on ``label_expr`` (a 0/1 Column over ``docs``) and score
-    every document: ``(id, z_ppm, clf_prob_ppm)``.  The labeled feature
+    """Train on ``label_expr`` (a 0/1 or boolean Column over ``docs``;
+    any other value raises) and score every document:
+    ``(id, z_ppm, clf_prob_ppm)``.  The labeled feature
     table is persisted only WHILE training iterates it, then released —
     the returned scores recompute the feature aggregate once at
     materialize time (one extra corpus pass) rather than pinning a
@@ -322,7 +328,8 @@ def quality_probe(
     and drive :func:`train_linear_probe` / :func:`score_linear_probe`
     directly (the shape ``jobs/run_curation.py`` uses)."""
     feats = probe_features(
-        docs.withColumn("y", label_expr.cast("bigint")),
+        # the RAW label: train_linear_probe validates it before its cast
+        docs.withColumn("y", label_expr),
         text_col=text_col, id_col=id_col, dims=dims, carry=("y",),
     ).persist()
     try:

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -182,13 +183,19 @@ def run_resumable(
     )
     docs_out = {int(r.bucket): int(r.docs_out) for r in docs_out_rows}
     bytes_out = _bucket_dir_bytes(spark, out_dir, pending_ids)
+    # Built through a pandas frame (Arrow; columns map to the schema by
+    # position): the rows plan as a JVM LocalTableScan.  A list of tuples
+    # plans as Scan ExistingRDD, which starts Python-worker tasks of its
+    # own to write bucket-count rows.
     lineage = spark.createDataFrame(
-        [
-            (run_id, int(r.bucket), n_buckets, int(r.docs_in),
-             docs_out.get(int(r.bucket), 0),
-             bytes_out.get(int(r.bucket), 0), wall_ms, "done")
-            for r in docs_in_rows
-        ],
+        pd.DataFrame(
+            [
+                (run_id, int(r.bucket), n_buckets, int(r.docs_in),
+                 docs_out.get(int(r.bucket), 0),
+                 bytes_out.get(int(r.bucket), 0), wall_ms, "done")
+                for r in docs_in_rows
+            ]
+        ),
         schema=LINEAGE_SCHEMA,
     )
     lineage.write.mode("append").parquet(lineage_dir)

@@ -177,6 +177,18 @@ def test_fractional_labels_fail_fast(spark):
         )
 
 
+def test_quality_probe_validates_the_uncast_label(spark):
+    """quality_probe must hand train_linear_probe the RAW label: a 0.7
+    label expression cast to bigint first would truncate to a 'valid'
+    0.  A boolean label is 0/1 by type and trains."""
+    docs = _df(spark, [(1, "a b", 1), (2, "c d", 0)],
+               "doc_id bigint, text string, y bigint")
+    with pytest.raises(ValueError, match="must be 0/1"):
+        quality_probe(docs, F.col("y") * F.lit(0.7), iters=1)
+    scored = quality_probe(docs, F.col("y") == 1, iters=1)
+    assert {r.id for r in scored.collect()} == {1, 2}
+
+
 def test_model_width_mismatch_raises(spark):
     feats = probe_features(
         _df(spark, [(1, "a b c")], "doc_id bigint, text string"),

@@ -139,9 +139,9 @@ def test_non_numeric_shuffle_partitions_conf_falls_back(spark):
     """Vendor platforms may set spark.sql.shuffle.partitions to a
     non-numeric value (e.g. "auto" under auto-optimized shuffle; stock
     Spark rejects it at conf-set time, forks accept it) — the media
-    exchange's number-pinning must fall back to default parallelism
-    instead of failing plan-build with ValueError."""
-    from ocr_spark.pipeline import _pinned_media_partitions
+    and splice exchanges' number-pinning must fall back to default
+    parallelism instead of failing plan-build with ValueError."""
+    from ocr_spark.pipeline import _pinned_partitions
 
     class _Conf:
         def __init__(self, value):
@@ -159,11 +159,11 @@ def test_non_numeric_shuffle_partitions_conf_falls_back(spark):
         def __init__(self, value):
             self.conf = _Conf(value)
 
-    assert _pinned_media_partitions(_Session("auto")) == 7
-    assert _pinned_media_partitions(_Session(None)) == 7
-    assert _pinned_media_partitions(_Session("64")) == 64
+    assert _pinned_partitions(_Session("auto")) == 7
+    assert _pinned_partitions(_Session(None)) == 7
+    assert _pinned_partitions(_Session("64")) == 64
     # and the live session resolves to its real numeric setting
-    assert _pinned_media_partitions(spark) == int(
+    assert _pinned_partitions(spark) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
 

@@ -95,3 +95,60 @@ def test_lineage_rows_account_for_all_docs(spark, tmp_path):
     assert sum(r.docs_out for r in rows) == N_DOCS
     assert all(r.status == "done" for r in rows)
     assert all(r.bytes_out > 0 for r in rows if r.docs_out > 0)
+
+
+def test_lineage_rows_plan_as_local_table_scan(spark, tmp_path):
+    """The lineage append reads its bucket rows from a JVM
+    LocalTableScan, not a Scan ExistingRDD (which runs Python-worker
+    tasks to write bucket-count rows), and the rows and their types read
+    back as the committed sink and input say."""
+    import os
+
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lineage")
+    spans_df, media_df = _corpus(spark)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        found, it = {}, store.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            found[e.executionId()] = e.physicalPlanDescription()
+        return found
+
+    before = set(executions())
+    run_resumable(spark, spans_df, media_df, out, lin, "r1",
+                  n_buckets=BUCKETS)
+    appends = [
+        plan for eid, plan in executions().items()
+        if eid not in before
+        and "InsertIntoHadoopFsRelationCommand" in plan and lin in plan
+    ]
+    assert len(appends) == 1, len(appends)
+    assert "LocalTableScan" in appends[0]
+    assert "Scan ExistingRDD" not in appends[0]
+
+    lineage = spark.read.parquet(lin)
+    assert lineage.dtypes == [
+        ("run_id", "string"), ("bucket", "int"), ("n_buckets", "int"),
+        ("docs_in", "bigint"), ("docs_out", "bigint"),
+        ("bytes_out", "bigint"), ("wall_ms", "bigint"),
+        ("status", "string"),
+    ]
+    docs_in = {
+        r.bucket: r["count"]
+        for r in spans_df.groupBy(
+            bucket_of(F.col("doc_id"), BUCKETS).alias("bucket")
+        ).count().collect()
+    }
+    rows = lineage.collect()
+    assert len({r.wall_ms for r in rows}) == 1
+    got = {r.bucket: (r.run_id, r.n_buckets, r.docs_in, r.docs_out,
+                      r.bytes_out, r.status) for r in rows}
+    want = {}
+    for b, n in docs_in.items():
+        bdir = os.path.join(out, f"bucket={b}")
+        size = sum(os.path.getsize(os.path.join(bdir, f))
+                   for f in os.listdir(bdir) if f.endswith(".parquet"))
+        want[b] = ("r1", BUCKETS, n, n, size, "done")
+    assert got == want
