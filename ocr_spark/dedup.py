@@ -18,12 +18,14 @@ All shapes are chosen for the 100 TB case, tested at SF scale:
 Every numeric primitive is oracle-portable: base hashes are the md5-based
 60-bit hash from :mod:`ocr_spark.textstats`; MinHash permutations are an
 affine universal family over that hash (pure arithmetic) — so each
-operator has a replayable DuckDB oracle.  (An xxhash64 ``hash_mode='fast'``
-twin existed through round 2; once the permutations went affine, A/B
-measurement showed the base-hash choice is immaterial — base stage 0.78 s
-portable vs 0.77 s fast at sf0.1/64 partitions, end-to-end within VM
-noise — so the second code path was removed rather than carried
-unjustified.)
+operator has a replayable DuckDB oracle.  There is no faster-hash twin:
+with affine permutations the base-hash choice is immaterial (an xxhash64
+base measured 0.77 s vs 0.78 s portable at sf0.1/64 partitions,
+end-to-end within VM noise).
+
+The batch MinHash-pair, passage and frequent-line operators are each
+their incremental twin over an empty store (committed side ``None``), so
+the one-shot and cross-run paths share one body and cannot drift apart.
 """
 
 from __future__ import annotations
@@ -293,11 +295,10 @@ def exact_duplicates_incremental(
     kept)`` with ``kept = ¬dup_of_committed ∧ id = new_canonical_id``.
     Append the kept rows' digests to the store to commit the run.
 
-    **Behavior changed (round 5):** ``new_canonical_id`` is NULL on
-    ``dup_of_committed`` rows.  It used to carry the delta's min id even
-    there — but that "canonical" is itself dropped (the committed copy
-    wins), so an auditor grouping by it attributed docs to a ghost.  The
-    true committed canonical is a store lookup away (join the store on
+    ``new_canonical_id`` is NULL on ``dup_of_committed`` rows: the
+    delta's min id is itself dropped there (the committed copy wins), so
+    an auditor grouping by it would attribute docs to a ghost.  The true
+    committed canonical is a store lookup away (join the store on
     ``digest``); emitting NULL keeps this operator free of any
     committed-side grouping (the store contributes a distinct digest
     probe only — see the shape note below).
@@ -456,13 +457,13 @@ def minhash_lsh_pairs(
     (small) candidate pair set.
 
     All hash primitives are the md5-portable family (the only mode — see
-    the module docstring for why the xxhash64 twin was removed).
+    the module docstring).  This is :func:`incremental_minhash_pairs`
+    over an empty store, ``persist_base`` passed as its ``persist_new``.
     """
-    pairs, _base = _minhash_lsh_pairs_with_base(
-        df, text_col, id_col, k, band_size, verify_threshold, shingle_n,
-        persist_base,
+    return incremental_minhash_pairs(
+        minhash_sketches(df, text_col, id_col, k, shingle_n), None,
+        k, band_size, verify_threshold, persist_base,
     )
-    return pairs
 
 
 def minhash_sketches(
@@ -545,7 +546,7 @@ def band_table(
     # textstats.explode_non_null (outer + null filter), never a plain
     # explode: the optimizer's inferred `size(...) > 0` pre-filter for
     # non-outer generators re-evaluates the band expression below the
-    # exchange — see _dup_gram_positions for the measurement.  k ≥ 1
+    # exchange — see explode_non_null for the measurement.  k ≥ 1
     # means no row is ever actually null here (a null sig raises in
     # `guarded`).
     return explode_non_null(
@@ -599,41 +600,6 @@ def _verify_pairs(
     )
 
 
-def _minhash_lsh_pairs_with_base(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_MINHASH_K,
-    band_size: int = 2,
-    verify_threshold: float = 0.3,
-    shingle_n: int = DEFAULT_SHINGLE,
-    persist_base: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Like :func:`minhash_lsh_pairs` but also returns the persisted
-    sketch base (or None) so a caller that fully materializes the pairs
-    (e.g. :func:`dedup_clusters`) can unpersist it instead of leaving the
-    CacheManager entry alive for the session."""
-    toks = tokens(F.col(text_col))
-    sh = shingle_hashes(toks, shingle_n)
-    base = df.select(F.col(id_col).alias("id"), sh.alias("sh"))
-    # The hashed-shingle base feeds banding AND both sides of the verify
-    # join; persisting it avoids recomputing tokenize+shingle+hash three
-    # times (spills to disk when it outgrows memory — it is the compressed
-    # per-doc sketch, ~2 orders smaller than the corpus text).  Spark's
-    # CacheManager holds the entry until unpersist, so repeated callers in
-    # one long session should pass persist_base=False (or clearCache());
-    # one-shot jobs keep the default.
-    if persist_base:
-        base = base.persist()
-    sig_df = base.withColumn(
-        "sig", minhash_signature(F.col("sh"), k)
-    )
-    banded = band_table(sig_df, k, band_size)
-    cand = _band_self_pairs(banded).distinct()
-    pairs = _verify_pairs(cand, base, verify_threshold)
-    return pairs, (base if persist_base else None)
-
-
 def incremental_minhash_pairs(
     new_sketches: DataFrame,
     committed_sketches: DataFrame | None = None,
@@ -666,8 +632,10 @@ def incremental_minhash_pairs(
     sides were sketched with the same ``k``/``band_size``/``shingle_n``.
     ``committed_sketches=None`` is the first batch (new × new only).
     ``persist_new`` caches the delta sketch (it feeds its band table,
-    the verify join, and typically the subsequent store append) — same
-    session-lifetime caveat as ``persist_base`` elsewhere."""
+    both sides of the verify join, and typically the subsequent store
+    append), so tokenize+shingle+hash runs once.  Spark's CacheManager
+    holds the entry until unpersist: repeated callers in one long session
+    should pass False (or ``clearCache()``)."""
     if persist_new:
         new_sketches = new_sketches.persist()
     nb = band_table(new_sketches, k, band_size)
@@ -715,7 +683,7 @@ def _line_table(
     exploded = base.select(
         # outer + null filter: avoids the inferred size>0 pre-filter
         # re-evaluating a caller-synthesized lines expression at the
-        # scan (see _dup_gram_positions).  Docs with empty lines arrays
+        # scan (see textstats.explode_non_null).  Docs with empty lines arrays
         # contribute nothing either way; null ELEMENTS were already
         # stripped in `base`.
         "id", F.posexplode_outer("lines").alias("pos", "line")
@@ -837,22 +805,12 @@ def drop_frequent_lines(
     sketch, the cache entry lives until the session clears it, so
     repeated callers in one long session should pass False or
     ``clearCache()``.  Output: ``(id, kept_lines, n_lines_in,
-    n_lines_kept)``.
+    n_lines_kept)``.  This is :func:`drop_frequent_lines_incremental`
+    over an empty store.
     """
-    base, exploded = _line_table(df, lines_col, id_col)
-    if persist_exploded:
-        exploded = exploded.persist()
-    doc_freq = line_doc_freqs_from_exploded(exploded)
-    n_docs = base.agg(F.count(F.lit(1)).alias("n_docs"))
-    kept = (
-        exploded.join(doc_freq, on="line_h")
-        .join(F.broadcast(n_docs))
-        .filter(
-            F.col("doc_freq").cast("double")
-            < F.lit(max_doc_frac) * F.col("n_docs").cast("double")
-        )
+    return drop_frequent_lines_incremental(
+        df, None, 0, lines_col, id_col, max_doc_frac, persist_exploded
     )
-    return _reassemble_kept_lines(base, kept)
 
 
 def _reassemble_kept_lines(base: DataFrame, kept: DataFrame) -> DataFrame:
@@ -911,39 +869,26 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     checkpoint_mode: str = "auto",
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Connected components: ``(id) × (id_a, id_b)`` → ``(id, cluster_id)``
     where ``cluster_id`` is the minimum node id reachable in the undirected
     pair graph (singletons label themselves).  Edges whose endpoints are
-    not in ``nodes`` do not participate: min-label ignores them
-    structurally (a foreign id has no label row), and the star variant
-    semi-joins them away up front, so both algorithms label identically
-    on any input.
+    not in ``nodes`` do not participate (a foreign id has no label row to
+    relay).
 
-    ``algorithm='minlabel'`` (default) is driver-looped min-label
-    propagation: each round joins current labels across the
-    (both-direction) edge list, takes the per-node min, and stops when no
-    label changed — the number of rounds is the cluster DIAMETER, which
-    for near-dup clusters (cliquish by construction: LSH pairs within a
-    verify threshold) is 2-4, not O(n).  Each round is one
-    broadcast-or-shuffle join + one groupBy min, and the
-    convergence signal rides the SAME job via ``Observation``
-    (``sum(changed)`` collected as an observed metric during the round's
-    checkpoint materialization) — no separate compare-join probe job per
-    iteration.  Checkpointing truncates the lineage every round so the
-    plan does not grow with the iteration count (the classic
-    iterative-DataFrame trap).
-
-    ``algorithm='star'`` is the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"): each round rewires every node toward its neighborhood
-    minimum, provably preserving components while (at least) halving
-    component diameter per round — O(log n) rounds on CHAIN-shaped
-    graphs where min-label needs diameter rounds.  Near-dup graphs are
-    cliquish, so min-label stays the default; reach for ``'star'`` when
-    the edge set may contain long chains (transitive similarity at a low
-    threshold) and a 25-round diameter budget could genuinely trip.
+    Driver-looped min-label propagation: each round joins current labels
+    across the (both-direction) edge list, takes the per-node min, and
+    stops when no label changed — the number of rounds is the cluster
+    DIAMETER, which for near-dup clusters (cliquish by construction: LSH
+    pairs within a verify threshold) is 2-4, not O(n).  Each round is one
+    broadcast-or-shuffle join + one groupBy min, and the convergence
+    signal rides the SAME job via ``Observation`` (``sum(changed)``
+    collected as an observed metric during the round's checkpoint
+    materialization) — no separate compare-join probe job per iteration.
+    Checkpointing truncates the lineage every round so the plan does not
+    grow with the iteration count (the classic iterative-DataFrame trap).
+    A graph whose diameter exceeds ``max_iter`` raises ``RuntimeError``
+    rather than return partial labels.
 
     ``checkpoint_mode`` picks how lineage is truncated between rounds:
 
@@ -964,11 +909,6 @@ def connected_components(
       configured, else ``'local'``.
     """
     _ckpt = make_checkpointer(nodes.sparkSession, checkpoint_mode)
-
-    if algorithm == "star":
-        return _star_components(nodes, edges, max_iter, _ckpt)
-    if algorithm != "minlabel":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
 
     from pyspark.sql import Observation
 
@@ -1020,105 +960,13 @@ def connected_components(
         # worse than failing: the caller keeps duplicate documents and the
         # recursive-closure oracle diverges.  max_iter bounds the cluster
         # DIAMETER; hitting it means the graph is chain-shaped beyond the
-        # budget — raise it, or switch to algorithm='star'.
+        # budget.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds the iteration budget); "
-            "algorithm='star' converges in O(log n) rounds on chain graphs"
+            "(component diameter exceeds the iteration budget); raise "
+            "max_iter"
         )
     return labels
-
-
-def _star_components(nodes, edges, max_iter, _ckpt) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14).
-
-    Each round: **large-star** attaches every node's strictly-larger
-    neighbors to the minimum of its closed neighborhood; **small-star**
-    (over the re-canonicalized edges) attaches each node and its
-    not-larger neighbors to that minimum.  Both steps provably preserve
-    the component partition while contracting long paths, so component
-    diameter (and with it the round count) drops geometrically —
-    O(log n) rounds on a path graph versus O(n) for min-label.  At the
-    fixed point the edge set is a star forest: every non-minimum node
-    carries exactly the edge (component_min, node).
-
-    Cost shape per round: two groupBy-min aggregations + two equi-joins
-    + distincts, all keyed by node id — the paper's per-reducer
-    neighborhood iteration is expressed as join-against-the-min instead
-    of collect_list, so a celebrity node never materializes its
-    adjacency inside one task.  Convergence = the canonical edge set
-    reaches a fixed point, checked exactly (count + exceptAll over the
-    two checkpointed rounds — cheap scans, no recompute).
-    """
-    # Restrict edges to the node set up front (two semi-joins, once,
-    # before the loop).  min-label propagation structurally ignores
-    # endpoints absent from ``nodes`` (a foreign id has no label row to
-    # relay), while the star contraction would happily propagate a
-    # foreign minimum and emit a cluster_id that is no node's id — the
-    # two algorithms must label identically on the same input.
-    node_ids = nodes.select("id")
-    e = _ckpt(
-        edges.join(node_ids, edges.id_a == node_ids.id, "leftsemi")
-        .join(node_ids, edges.id_b == node_ids.id, "leftsemi")
-        .select(
-            F.least("id_a", "id_b").alias("lo"),
-            F.greatest("id_a", "id_b").alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    converged = False
-    for _ in range(max_iter):
-        # large-star over directed neighborhoods (u → every neighbor v)
-        both = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")) \
-            .unionByName(
-                e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-            )
-        m = (
-            both.groupBy("u").agg(F.min("v").alias("mn"))
-            .select("u", F.least("u", "mn").alias("m"))
-        )
-        # m ≤ u < v, so (m, v) is already canonical lo < hi
-        large = (
-            both.join(m, on="u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
-            .distinct()
-        )
-        # small-star: orient to the larger endpoint; every hi-node and
-        # its smaller neighbors attach to its minimum smaller neighbor
-        sm = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        att_neighbors = large.join(sm, on="hi").select(
-            F.col("m").alias("lo"), F.col("lo").alias("hi")
-        )
-        att_self = sm.select(F.col("m").alias("lo"), F.col("hi"))
-        e_next = _ckpt(
-            att_neighbors.unionByName(att_self)
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
-        # exact fixed-point test on two checkpointed distinct sets:
-        # equal counts + one-sided containment ⟺ set equality
-        if e_next.count() == e.count() and e_next.exceptAll(e).isEmpty():
-            e = e_next
-            converged = True
-            break
-        e = e_next
-    if not converged:
-        raise RuntimeError(
-            f"star connected_components did not converge in {max_iter} "
-            "rounds (log2 of the largest component diameter exceeds the "
-            "budget — raise max_iter)"
-        )
-    centers = e.groupBy("hi").agg(F.min("lo").alias("cluster_id"))
-    return (
-        nodes.join(centers, nodes.id == centers.hi, "left")
-        .select(
-            "id",
-            F.coalesce(F.col("cluster_id"), F.col("id")).alias("cluster_id"),
-        )
-    )
 
 
 def dedup_clusters(
@@ -1134,17 +982,17 @@ def dedup_clusters(
     keeps ``is_canonical`` rows (the minimum doc id of each component) and
     drops the rest.  Every doc appears exactly once; singletons are their
     own canonical."""
-    pairs, base = _minhash_lsh_pairs_with_base(
-        df, text_col=text_col, id_col=id_col,
-        verify_threshold=verify_threshold,
+    sketches = minhash_sketches(df, text_col, id_col).persist()
+    pairs = incremental_minhash_pairs(
+        sketches, None, verify_threshold=verify_threshold, persist_new=False
     )
-    edges = pairs.select("id_a", "id_b")
     nodes = df.select(F.col(id_col).alias("id"))
-    # connected_components localCheckpoints the edge list up front, so the
-    # sketch cache has served its purpose once the loop starts
-    labels = connected_components(nodes, edges)
-    if base is not None:
-        base.unpersist()
+    # connected_components checkpoints the edge list up front, so the
+    # sketch cache has served its purpose once the loop returns or raises
+    try:
+        labels = connected_components(nodes, pairs.select("id_a", "id_b"))
+    finally:
+        sketches.unpersist()
     return labels.select(
         "id", "cluster_id",
         (F.col("id") == F.col("cluster_id")).alias("is_canonical"),
@@ -1302,8 +1150,8 @@ def _simhash_block_rows(
         F.col("sig"), bits=bits, max_hamming=max_hamming, n_blocks=n_blocks
     )
     # textstats.explode_non_null, never a plain explode: the inferred
-    # pre-filter would duplicate the block arithmetic (see
-    # _dup_gram_positions for the measurement).
+    # pre-filter would duplicate the block arithmetic (see that helper
+    # for the measurement).
     return explode_non_null(base, blocks, "b", "id", "sig", *carry).select(
         "id", "sig", *carry, "b.block_idx", "b.block_val"
     )
@@ -1523,17 +1371,9 @@ def _gram_table_from_toks(
             lambda i: portable_hash(F.concat_ws(" ", F.slice(toks, i, k))),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
-    # posexplode_OUTER + a cheap null filter, NOT plain posexplode: the
-    # optimizer infers a `size(grams) > 0` pre-filter for non-outer
-    # generators and pushes it through the exchange to the scan, where
-    # the whole interpreted gram expression re-evaluates per doc on the
-    # scan's (often single-row-group → single-core) partitioning —
-    # measured 3.4 s vs 0.6 s for this stage at sf0.1.  The outer form
-    # gets no inferred filter; the null check runs on Generate OUTPUT.
-    # Trade-off: outer generators fall out of whole-stage codegen, but
-    # that loss is an order of magnitude smaller than the pushed
-    # re-evaluation (simhash's feature explode measured 37 s plain vs
-    # 2.8 s outer on the repartitioned union corpus).
+    # posexplode_OUTER + a null filter, NOT plain posexplode: the
+    # posexplode form of textstats.explode_non_null (see it for the
+    # measured cost of the inferred pre-filter on this very stage).
     gt = (
         tdf.select("id", grams.alias("grams"))
         .select("id", F.posexplode_outer("grams").alias("pos", "gram_h"))
@@ -1560,33 +1400,32 @@ def gram_doc_freqs(gt: DataFrame) -> DataFrame:
     )
 
 
-def _dup_gram_positions(
-    df: DataFrame,
+def _marked_windows(
+    tdf: DataFrame,
+    committed_freqs: DataFrame | None,
     k: int,
     min_docs: int,
-    text_col: str,
-    id_col: str,
-    persist_grams: bool = True,
+    persist_grams: bool,
 ) -> DataFrame:
-    """``(id, pos)`` — 0-based token positions that START a ``k``-token
-    window whose gram occurs in at least ``min_docs`` DISTINCT documents;
-    marking is one equi-join back on the hash."""
-    return _dup_gram_positions_from_toks(
-        _tokenized(df, text_col, id_col), k, min_docs, persist_grams
-    )
-
-
-def _dup_gram_positions_from_toks(
-    tdf: DataFrame, k: int, min_docs: int, persist_grams: bool = True
-) -> DataFrame:
-    """:func:`_dup_gram_positions` over a pre-tokenized ``(id, toks)``
-    frame — the SINGLE source of the marking semantics (gram table →
-    distinct-doc frequency ≥ ``min_docs`` → hash-keyed join back);
-    :func:`strip_dup_passages` enters here so its marks can never drift
-    from :func:`dup_passages`'s."""
+    """``(id, pos)`` — 0-based token positions of a pre-tokenized ``(id,
+    toks)`` frame that START a ``k``-token window whose gram occurs in at
+    least ``min_docs`` DISTINCT documents, counting the delta plus the
+    committed :func:`gram_doc_freqs` store (None = empty store).  The
+    single source of the marking semantics: :func:`dup_passages_incremental`
+    and :func:`strip_dup_passages` both enter here, so their marks can
+    never drift apart."""
     gt = _gram_table_from_toks(tdf, k, persist_grams)
-    freq = gram_doc_freqs(gt).filter(F.col("n_docs") >= min_docs)
-    return gt.join(freq.select("gram_h"), on="gram_h").select("id", "pos")
+    freq = gram_doc_freqs(gt)
+    if committed_freqs is not None:
+        freq = (
+            freq.unionByName(
+                committed_freqs.select("gram_h", "n_docs")
+            )
+            .groupBy("gram_h")
+            .agg(F.sum("n_docs").alias("n_docs"))
+        )
+    frequent = freq.filter(F.col("n_docs") >= min_docs).select("gram_h")
+    return gt.join(frequent, on="gram_h").select("id", "pos")
 
 
 def _spans_from_marked(marked: DataFrame, k: int) -> DataFrame:
@@ -1661,11 +1500,11 @@ def dup_passages(
     gram-keyed; the islands window shuffles on doc id only.  A corpus-
     ubiquitous passage is a hot gram key — its frequency row is on the
     one-row-per-gram side, and AQE skew-join splits the residual probe.
-    No stage ever holds more than one document's positions in order."""
-    marked = _dup_gram_positions(
-        df, k, min_docs, text_col, id_col, persist_grams
+    No stage ever holds more than one document's positions in order.
+    This is :func:`dup_passages_incremental` over an empty store."""
+    return dup_passages_incremental(
+        df, None, k, min_docs, text_col, id_col, persist_grams
     )
-    return _spans_from_marked(marked, k)
 
 
 def dup_passages_incremental(
@@ -1697,18 +1536,10 @@ def dup_passages_incremental(
     Shape for 100 TB: the committed side contributes ONE aggregated row
     per distinct gram hash into the frequency join — no text, no
     positions, no re-gramming; everything else is the batch shape."""
-    gt = _gram_table(delta, k, text_col, id_col, persist_grams)
-    freq = gram_doc_freqs(gt)
-    if committed_freqs is not None:
-        freq = (
-            freq.unionByName(
-                committed_freqs.select("gram_h", "n_docs")
-            )
-            .groupBy("gram_h")
-            .agg(F.sum("n_docs").alias("n_docs"))
-        )
-    frequent = freq.filter(F.col("n_docs") >= min_docs).select("gram_h")
-    marked = gt.join(frequent, on="gram_h").select("id", "pos")
+    marked = _marked_windows(
+        _tokenized(delta, text_col, id_col), committed_freqs, k, min_docs,
+        persist_grams,
+    )
     return _spans_from_marked(marked, k)
 
 
@@ -1733,15 +1564,15 @@ def strip_dup_passages(
     (``collect_list`` after the islands merge — spans per doc are few by
     construction), broadcast back onto the doc row by id; the token cut
     is then a narrow per-row ``filter`` by index.  No second explode of
-    the corpus, and — since round 5 — no second TOKENIZE either: the
-    ``(id, toks)`` frame is computed once (persisted under
-    ``persist_grams``) and feeds both the gram table and the cut join
-    (it was previously re-derived from the raw text in the cut join — a
-    second full narrow pass over the corpus at 100 TB)."""
+    the corpus and no second TOKENIZE: the ``(id, toks)`` frame is
+    computed once (persisted under ``persist_grams``) and feeds both the
+    marking (:func:`dup_passages`' code, over an empty store) and the cut
+    join — re-deriving it from the raw text would be a second full
+    narrow pass over the corpus at 100 TB."""
     tdf = _tokenized(df, text_col, id_col)
     if persist_grams:
         tdf = tdf.persist()
-    marked = _dup_gram_positions_from_toks(tdf, k, min_docs, persist_grams)
+    marked = _marked_windows(tdf, None, k, min_docs, persist_grams)
     spans = _spans_from_marked(marked, k)
     per_doc = spans.groupBy("id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("spans")
@@ -1774,7 +1605,6 @@ def incremental_components(
     committed_labels: DataFrame | None = None,
     max_iter: int = 25,
     checkpoint_mode: str = "auto",
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Cross-run incremental CONNECTED COMPONENTS: label a delta's
     documents against a committed cluster store without ever re-running
@@ -1814,8 +1644,7 @@ def incremental_components(
     pairs = new_pairs.select("id_a", "id_b")
     if committed_labels is None:
         labels = connected_components(
-            new_ids.select("id"), pairs, max_iter, checkpoint_mode,
-            algorithm,
+            new_ids.select("id"), pairs, max_iter, checkpoint_mode
         )
         return labels.select(
             "id", "cluster_id", F.lit("delta").alias("role")
@@ -1839,9 +1668,7 @@ def incremental_components(
         .unionByName(touched.select(F.col("cluster_id").alias("id")))
         .distinct()
     )
-    labels = connected_components(
-        nodes, edges, max_iter, checkpoint_mode, algorithm
-    )
+    labels = connected_components(nodes, edges, max_iter, checkpoint_mode)
     delta = labels.join(new_ids.select("id"), on="id", how="leftsemi")
     reps = touched.select(F.col("cluster_id").alias("id")).distinct()
     merges = labels.join(reps, on="id", how="leftsemi").filter(

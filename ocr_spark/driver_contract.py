@@ -1050,7 +1050,7 @@ def q_dup_passages_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _passage_marked_cte(k: int) -> str:
     """Shared oracle CTE chain ending in ``m(doc_id, pos)`` — the marked
-    gram start positions (mirrors dedup._dup_gram_positions)."""
+    gram start positions (mirrors dedup._marked_windows)."""
     toks = _DUCK_TOKENS.format(t="text")
     gram_h = _DUCK_HASH.format(
         x=f"array_to_string(list_slice(tk, i, i + {k - 1}), ' ')"

@@ -64,17 +64,17 @@ def explode_spans(
     A document with an empty (or null) spans array must still yield one
     all-null row — dropping it would lose the document from the output
     instead of producing ``(doc_id, spans_out=[], fields-of-nothing)``.
-    Rounds 1-4 used ``explode_outer`` for that; round 5 instead PADS the
-    empty/null array with the all-null marker span and uses plain
-    ``explode``: outer generators fall out of whole-stage codegen, and
-    the flagship paid that interpreted-Generate cost on EVERY span to
-    guard the rare empty doc (measured ~10% on the extract bench —
-    VERDICT r4).  Plain explode re-enters codegen; the optimizer's
-    inferred ``size(...) > 0`` pre-filter — the trap that makes plain
-    explode dangerous over EXPENSIVE generator expressions (see
-    dedup._dup_gram_positions) — is harmless here because the padded
-    expression is just size+when over a scanned column, and the padding
-    makes the filter always-true (no row loss by construction).
+    The empty/null array is PADDED with the all-null marker span and
+    exploded with plain ``explode``, not ``explode_outer``: outer
+    generators fall out of whole-stage codegen, and the flagship would
+    pay that interpreted-Generate cost on EVERY span to guard the rare
+    empty doc (measured ~10% on the extract bench).  Plain explode stays
+    in codegen; the optimizer's inferred ``size(...) > 0`` pre-filter —
+    the trap that makes plain explode dangerous over EXPENSIVE generator
+    expressions (see textstats.explode_non_null) — is harmless here
+    because the padded expression is just size+when over a scanned
+    column, and the padding makes the filter always-true (no row loss by
+    construction).
 
     The monster-document ceiling is applied HERE, inside the one scan:
     a document whose span count exceeds ``max_spans_per_doc`` has its
@@ -135,17 +135,17 @@ def text_path(exploded: DataFrame, cfg: PipelineConfig) -> DataFrame:
     rows get their quarantine error rows (the empty-doc placeholder
     alone passes through errorless).
 
-    One branch, not two (rounds 1-4 split text and other into separate
-    filter-and-union subtrees): each union arm is its own traversal of
-    the source, so the split charged a THIRD full pass over the input
-    table (and a third run of the corpus generator in the synthetic
-    contract query) to route rows that are, by construction, rare.
-    A ``when`` ladder routes them in the text branch's own pass instead
-    — one fewer full pass over the source.  Measured at sf0.1/local[32]:
-    −24% when the source is expensive (the synthetic-generator contract
-    query, 5.97 → 4.55 s warm-min — the shape that models a 100 TB scan)
-    and noise-level (3.18 → 3.07 s min-of-5) over a pre-materialized
-    parquet corpus where the OCR stage dominates.  The strip UDF runs
+    One branch, not separate text and other filter-and-union subtrees:
+    each union arm is its own traversal of the source, so a split would
+    charge a THIRD full pass over the input table (and a third run of
+    the corpus generator in the synthetic contract query) to route rows
+    that are, by construction, rare.  A ``when`` ladder routes them in
+    the text branch's own pass instead.  Measured against the split at
+    sf0.1/local[32]: −24% when the source is expensive (the
+    synthetic-generator contract query, 5.97 → 4.55 s warm-min — the
+    shape that models a 100 TB scan) and noise-level (3.18 → 3.07 s
+    min-of-5) over a pre-materialized parquet corpus where the OCR stage
+    dominates.  The strip UDF runs
     over the merged rows, but non-text rows enter it as NULL (the
     ``when`` guard) and null-in → null-out is a no-op row for the Arrow
     batch."""

@@ -90,7 +90,7 @@ def hashed_token_sums(
             *[F.col(c) for c in carry],
             # outer: empty docs keep one null-token row (zero vote below)
             # AND no inferred size>0 pre-filter re-evaluates tokens() at
-            # the scan (see dedup._dup_gram_positions)
+            # the scan (see textstats.explode_non_null)
             F.explode_outer(tokens(F.col(text_col))).alias("tok"),
         )
         .select(
@@ -671,7 +671,7 @@ def ivf_search(
         "qnrm",
         # outer + null filter: the inferred size>0 pre-filter would
         # re-score every centroid per query row a second time (see
-        # dedup._dup_gram_positions).  n_probes ≥ 1 → never null.
+        # textstats.explode_non_null).  n_probes ≥ 1 → never null.
         F.explode_outer("cells").alias("cell"),
     ).filter(F.col("cell").isNotNull())
 
@@ -1006,7 +1006,7 @@ def lsh_ann_pairs(
             prep = prep.filter(F.col("nrm") > 0)
         if persist_base:
             prep = prep.persist()
-        # outer + null filter: see dedup._dup_gram_positions — a plain
+        # outer + null filter: see textstats.explode_non_null — a plain
         # explode's inferred size>0 pre-filter re-evaluates the bucket
         # hashing against the cache scan.  `tables` is never empty.
         banded = (

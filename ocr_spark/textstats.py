@@ -77,13 +77,19 @@ def explode_non_null(df: DataFrame, expr, alias: str, *keep) -> DataFrame:
     — the ONE supported way to explode a computed array here.
 
     A plain ``explode`` makes Catalyst infer a ``size(expr) > 0``
-    pre-filter that re-evaluates ``expr`` at the scan (doubling the
-    expression work — measured in :func:`ocr_spark.dedup._dup_gram_positions`),
-    while a bare ``explode_outer`` emits one NULL row per empty array
-    that every downstream aggregate would have to guard against.  Outer
-    + explicit null filter keeps single evaluation AND drops the ghost
-    rows.  This helper exists so a new call site cannot quietly pick the
-    non-outer variant and re-trigger the trap.
+    pre-filter and push it through the exchange to the scan, where the
+    whole generator expression re-evaluates per row on the scan's (often
+    single-row-group → single-core) partitioning.  Measured: the dedup
+    k-gram stage ran 3.4 s plain vs 0.6 s outer at sf0.1, and simhash's
+    feature explode 37 s plain vs 2.8 s outer on the repartitioned union
+    corpus.  Outer generators fall out of whole-stage codegen, but that
+    loss is an order of magnitude smaller.  A bare ``explode_outer``
+    emits one NULL row per empty array that every downstream aggregate
+    would have to guard against; outer + explicit null filter keeps
+    single evaluation AND drops the ghost rows.  This helper exists so a
+    new call site cannot quietly pick the non-outer variant and
+    re-trigger the trap (``posexplode`` sites use the same outer + null
+    filter form inline).
     """
     return (
         df.select(*keep, F.explode_outer(expr).alias(alias))

@@ -664,11 +664,10 @@ def test_ivf_training_bit_matches_python_twin(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
+@pytest.mark.parametrize("algorithm", ["minlabel"])
 def test_connected_components_topologies(spark, algorithm):
-    """Both algorithms vs known components: a 6-node chain (needs
-    diameter iterations under min-label), a triangle, an isolated pair,
-    and singletons — identical labels either way."""
+    """Min-label vs known components: a 6-node chain (needs diameter
+    iterations), a triangle, an isolated pair, and singletons."""
     from ocr_spark.dedup import connected_components
 
     edges = _df(spark, [
@@ -684,23 +683,18 @@ def test_connected_components_topologies(spark, algorithm):
                         [10, 11, 12, 13, 14, 15, 20, 21, 22, 30, 31, 40, 41]],
                 "id bigint")
     got = {r.id: r.cluster_id
-           for r in connected_components(
-               nodes, edges, algorithm=algorithm).collect()}
+           for r in connected_components(nodes, edges).collect()}
     assert got == {10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
                    20: 20, 21: 20, 22: 20, 30: 30, 31: 30, 40: 40, 41: 41}
 
-    with pytest.raises(ValueError, match="algorithm"):
-        connected_components(nodes, edges, algorithm="bogus")
 
-
-@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
+@pytest.mark.parametrize("algorithm", ["minlabel"])
 def test_connected_components_ignore_foreign_edge_endpoints(
     spark, algorithm
 ):
     """Edges mentioning ids absent from ``nodes`` must not relabel (or
     bridge) the node set, and cluster_id must always be a node's id —
-    min-label ignores foreign endpoints structurally; star must semi-join
-    them away rather than propagate a foreign minimum."""
+    min-label ignores foreign endpoints structurally."""
     from ocr_spark.dedup import connected_components
 
     edges = _df(spark, [
@@ -710,19 +704,18 @@ def test_connected_components_ignore_foreign_edge_endpoints(
     ], "id_a bigint, id_b bigint")
     nodes = _df(spark, [(2,), (3,), (5,)], "id bigint")
     got = {r.id: r.cluster_id
-           for r in connected_components(
-               nodes, edges, algorithm=algorithm).collect()}
+           for r in connected_components(nodes, edges).collect()}
     assert got == {2: 2, 3: 2, 5: 5}
 
 
-@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
+@pytest.mark.parametrize("algorithm", ["minlabel"])
 def test_connected_components_random_graph_vs_union_find(spark, algorithm):
     """Differential check on a seeded random graph vs a plain-Python
     union-find twin: arbitrary topology (not the hand-picked chains/
     triangles above), with duplicate edges, both orientations, self-loops,
-    and foreign endpoints all mixed in.  Both algorithms must produce
-    exactly the union-find labels (component minimum), restricted to the
-    node set with one-foreign-endpoint edges ignored."""
+    and foreign endpoints all mixed in.  Min-label must produce exactly
+    the union-find labels (component minimum), restricted to the node set
+    with one-foreign-endpoint edges ignored."""
     import random
 
     from ocr_spark.dedup import connected_components
@@ -762,7 +755,7 @@ def test_connected_components_random_graph_vs_union_find(spark, algorithm):
            for r in connected_components(
                _df(spark, [(i,) for i in node_ids], "id bigint"),
                _df(spark, edge_rows, "id_a bigint, id_b bigint"),
-               max_iter=60, algorithm=algorithm,
+               max_iter=60,
            ).collect()}
     assert got == want
 
@@ -779,11 +772,11 @@ def test_band_table_rejects_mismatched_sig_width(spark):
         band_table(narrow, k=128).collect()
 
 
-def test_star_components_chain_beats_minlabel_budget(spark):
-    """The large-star/small-star alternation halves component diameter
-    per round: a 2,000-node path graph converges well inside a 25-round
-    budget (O(log n)), where min-label — whose round count IS the
-    diameter — must raise on the same budget."""
+def test_minlabel_chain_fails_fast_naming_max_iter(spark):
+    """Min-label's round count IS the component diameter: a 2,000-node
+    path graph cannot converge inside a 25-round budget, so it must
+    raise (not return multi-label components), and the error must name
+    the fix — raising ``max_iter``."""
     from ocr_spark.dedup import connected_components
 
     n = 2000
@@ -791,15 +784,8 @@ def test_star_components_chain_beats_minlabel_budget(spark):
                 "id_a bigint, id_b bigint")
     nodes = _df(spark, [(i,) for i in range(n)], "id bigint")
 
-    labels = connected_components(
-        nodes, edges, max_iter=25, algorithm="star"
-    ).collect()
-    assert {r.cluster_id for r in labels} == {0}
-    assert len(labels) == n
-
-    with pytest.raises(RuntimeError, match="star"):
-        # min-label needs ~n rounds on a path; the error names the fix
-        connected_components(nodes, edges, max_iter=5)
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components(nodes, edges, max_iter=25)
 
 
 def test_minlabel_single_job_per_round(spark):
@@ -870,6 +856,23 @@ def test_connected_components_reliable_checkpoint(spark):
 
     with pytest.raises(ValueError, match="checkpoint_mode"):
         connected_components(nodes, edges, checkpoint_mode="bogus")
+
+
+def test_dedup_clusters_leaves_no_cached_relation(spark):
+    """dedup_clusters persists its MinHash sketch frame for the pair
+    generator and must unpersist it once the components are labeled — a
+    long session calling it repeatedly would otherwise pin one cache
+    entry per call."""
+    from ocr_spark.dedup import dedup_clusters
+
+    docs = _df(spark, [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "an entirely different sentence about tax forms"),
+    ], "doc_id bigint, text string")
+    spark.catalog.clearCache()
+    dedup_clusters(docs).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_dedup_clusters_canonical_per_component(spark):

@@ -1,34 +1,32 @@
-"""1,000,000-node connected-components stress with exact ground truth.
+"""Connected-components stress with exact ground truth.
 
-The contract gate proves `dedup_clusters` (minlabel + star) on the sf0.01
-corpus (~1k nodes); this script drives the SAME
-``ocr_spark.dedup.connected_components`` at 1M nodes / ~3M edges on a
-synthetic graph whose component structure is known by construction, so
-every label is verified exactly — not sampled:
+The contract gate proves `dedup_clusters` on the sf0.01 corpus (~1k
+nodes); this script drives the SAME min-label
+``ocr_spark.dedup.connected_components`` at 800k nodes (the default) on
+a synthetic graph whose component structure is known by construction,
+so every label is verified exactly — not sampled:
 
-- **cliquish region** (the near-dup LSH shape minlabel is designed for):
+- **cliquish region** (the near-dup LSH pair-graph shape):
   ``n_cliques`` complete graphs of ``clique_size`` nodes;
-- **chain region** (the adversarial shape the star algorithm exists for):
-  ``n_chains`` paths of ``chain_len`` nodes — diameter ``chain_len - 1``,
-  far beyond any sane minlabel round budget.
+- **one chain** (the adversarial shape): a path of ``chain_len`` nodes —
+  diameter ``chain_len - 1``, far beyond any sane min-label round budget.
 
-Ground truth per node is the component minimum, computable from the id
-alone (components are id-contiguous), so verification is one narrow join
-+ filter — no driver-side graph work.  Three measurements:
+Ground truth per node is the clique minimum, computable from the id
+alone (cliques are id-contiguous), so verification is one narrow filter
+— no driver-side graph work.  Two measurements:
 
-1. ``algorithm='star'`` over the FULL mixed graph — must label all 1M
-   nodes exactly (chains converge in O(log chain_len) rounds);
-2. ``algorithm='minlabel'`` over the cliquish region — diameter ≤ 2, the
-   production default on LSH pair graphs;
-3. ``algorithm='minlabel'`` over ONE chain with the default 25-round
-   budget — must raise (documented fail-fast: silently-wrong labels are
-   worse than failing), recorded honestly as ``minlabel_chain_failfast``.
+1. min-label over the cliquish region — diameter ≤ 2, must label every
+   clique node exactly;
+2. min-label over ONE chain with the default 25-round budget — must
+   raise a ``RuntimeError`` naming ``max_iter`` (documented fail-fast:
+   silently-wrong labels are worse than failing), recorded as
+   ``minlabel_chain_failfast``.
 
 Everything is generated executor-side from ``spark.range`` — no driver
 collections, no per-row Python.
 
 Usage: python tools/cc_stress.py [--cliques N] [--clique-size K]
-                                 [--chains C] [--chain-len L] [--out MD]
+                                 [--chain-len L] [--out MD]
 """
 
 from __future__ import annotations
@@ -48,7 +46,6 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--cliques", type=int, default=100_000)
     p.add_argument("--clique-size", type=int, default=8)
-    p.add_argument("--chains", type=int, default=200)
     p.add_argument("--chain-len", type=int, default=1000)
     p.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     p.add_argument("--out", help="markdown file to append the addendum to")
@@ -82,9 +79,6 @@ def main() -> None:
 def _run(spark, F, connected_components, args, cpus) -> None:
     k = args.clique_size
     clique_nodes = args.cliques * k
-    chain_nodes = args.chains * args.chain_len
-    base = clique_nodes  # chain ids start here
-    total = clique_nodes + chain_nodes
 
     # --- graph construction (all executor-side) -------------------------
     # clique edges: every pair (i < j) inside each of the n_cliques
@@ -100,75 +94,39 @@ def _run(spark, F, connected_components, args, cpus) -> None:
             (F.col("c") * k + F.col("j")).alias("id_b"),
         )
     )
-    # chain edges: (n, n+1) along each path of chain_len nodes.
-    per_chain = args.chain_len - 1
-    chain_edges = (
-        spark.range(args.chains * per_chain)
-        .select(
-            (F.lit(base)
-             + (F.col("id") / per_chain).cast("bigint") * args.chain_len
-             + F.col("id") % per_chain).alias("id_a"),
-        )
-        .select("id_a", (F.col("id_a") + 1).alias("id_b"))
-    )
-    all_nodes = spark.range(total).select("id")
-    all_edges = clique_edges.unionByName(chain_edges)
-    n_edges = all_edges.count()
+    n_edges = clique_edges.count()
 
-    # ground truth: component minimum from the id alone
-    def truth(col):
-        return (
-            F.when(col < base, (col / k).cast("bigint") * k)
-            .otherwise(
-                F.lit(base)
-                + ((col - base) / args.chain_len).cast("bigint")
-                * args.chain_len
-            )
-        )
-
-    def verify(labels):
-        bad = labels.filter(F.col("cluster_id") != truth(F.col("id"))).count()
-        n = labels.count()
-        return n, bad
-
-    # --- 1. star over the full mixed graph ------------------------------
-    t0 = time.monotonic()
-    star_labels = connected_components(
-        all_nodes, all_edges, max_iter=20, algorithm="star"
-    )
-    star_n, star_bad = verify(star_labels)
-    star_wall = time.monotonic() - t0
-
-    # --- 2. minlabel over the cliquish region (the production shape) ----
+    # --- 1. min-label over the cliquish region (the production shape) ---
+    # ground truth: the clique minimum from the id alone
     t0 = time.monotonic()
     ml_labels = connected_components(
-        spark.range(clique_nodes).select("id"), clique_edges,
-        max_iter=25, algorithm="minlabel",
+        spark.range(clique_nodes).select("id"), clique_edges, max_iter=25
     )
-    ml_n, ml_bad = verify(ml_labels)
+    ml_bad = ml_labels.filter(
+        F.col("cluster_id") != (F.col("id") / k).cast("bigint") * k
+    ).count()
+    ml_n = ml_labels.count()
     ml_wall = time.monotonic() - t0
 
-    # --- 3. minlabel fail-fast on one 1000-node chain --------------------
-    one_chain = chain_edges.filter(F.col("id_b") < base + args.chain_len)
-    one_chain_nodes = spark.range(base, base + args.chain_len).select("id")
+    # --- 2. min-label fail-fast on one chain ----------------------------
+    chain = spark.range(args.chain_len - 1).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
     failfast = False
     try:
         connected_components(
-            one_chain_nodes, one_chain, max_iter=25, algorithm="minlabel"
+            spark.range(args.chain_len).select("id"), chain, max_iter=25
         ).count()
-    except RuntimeError:
-        failfast = True
+    except RuntimeError as e:
+        failfast = "max_iter" in str(e)
 
     rec = {
         "metric": "cc_stress_1m",
-        "n_nodes": total,
-        "n_edges": n_edges,
-        "n_components": args.cliques + args.chains,
+        "n_clique_nodes": clique_nodes,
+        "n_clique_edges": n_edges,
+        "n_cliques": args.cliques,
         "chain_len": args.chain_len,
         "cpus": int(cpus),
-        "star_full_wall_s": round(star_wall, 1),
-        "star_nodes_labeled": star_n,
-        "star_label_mismatches": star_bad,
         "minlabel_clique_wall_s": round(ml_wall, 1),
         "minlabel_nodes_labeled": ml_n,
         "minlabel_label_mismatches": ml_bad,
@@ -179,13 +137,13 @@ def _run(spark, F, connected_components, args, cpus) -> None:
     if args.out:
         stamp = time.strftime("%Y-%m-%d %H:%M", time.gmtime())
         block = (
-            f"\n## Connected-components stress — {total:,} nodes, exact "
+            f"\n## Connected-components stress — {clique_nodes:,} clique "
+            f"nodes + a {args.chain_len}-node chain fail-fast, exact "
             f"ground truth (tools/cc_stress.py, {stamp})\n\n"
             "```json\n" + line + "\n```\n"
         )
         append_addendum(args.out, block)
-    ok = star_bad == 0 and ml_bad == 0 and failfast \
-        and star_n == total and ml_n == clique_nodes
+    ok = ml_bad == 0 and ml_n == clique_nodes and failfast
     sys.exit(0 if ok else 1)
 
 
