@@ -29,6 +29,8 @@ the oracle share them by construction.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -875,6 +877,44 @@ def incremental_lsh_ann_pairs(
     )
 
 
+def _cosine_self_join(
+    keyed: DataFrame, keys: list[str], dims: int, min_cosine: float,
+    dedup: bool,
+) -> DataFrame:
+    """The one bucket self-join + exact-cosine verify behind
+    :func:`lsh_ann_pairs` and :func:`semantic_dedup`.
+
+    ``keyed`` carries ``(id, *keys, nrm)`` plus the :func:`_flat_cols`
+    payload under prefix ``x``.  Two rows that share all ``keys`` are
+    one candidate (``id_a < id_b``); the verify reads the carried payload
+    and norms, so no vector joins back.  ``dedup`` distincts the verified pairs, for
+    inputs where one pair can share several keys (multi-table LSH).
+
+    NULL norms (missing vectors) can never verify, so they never pair.
+    Zero norms are excluded too whenever ``min_cosine > 0``: they all
+    share one bucket (every plane dot is 0) and every pair they form is
+    a forced cosine 0.0, so m such vectors would be m²/2 dead candidates
+    in one straggler bucket.  At ``min_cosine ≤ 0`` a 0.0 pair passes,
+    so there they pair."""
+    nrm = F.col("nrm")
+    keyed = keyed.filter(nrm > 0 if min_cosine > 0 else nrm.isNotNull())
+    pairs = (
+        keyed.alias("l")
+        .join(keyed.alias("r"), on=keys)
+        .filter(F.col("l.id") < F.col("r.id"))
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            _flat_cosine(
+                "l.x", "r.x", dims,
+                norm_a=F.col("l.nrm"), norm_b=F.col("r.nrm"),
+            ).alias("cosine_sim"),
+        )
+        .filter(F.col("cosine_sim") >= min_cosine)
+    )
+    return pairs.distinct() if dedup else pairs
+
+
 def lsh_ann_pairs(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -884,7 +924,6 @@ def lsh_ann_pairs(
     n_tables: int = 1,
     dims: int = DEFAULT_DIMS,
     n_planes: int = DEFAULT_PLANES,
-    persist_base: bool = True,
 ) -> DataFrame:
     """Bucketed ANN candidate pairs verified by exact cosine.
 
@@ -894,173 +933,59 @@ def lsh_ann_pairs(
     ``n_tables`` > 1 is the recall lever: a pair at angle θ collides in
     one table of p planes with probability (1−θ/π)^p; T independent
     tables raise that to 1−(1−(1−θ/π)^p)^T while multiplying candidate
-    work by ≤ T.  Tables are independent seeded plane sets; candidates
-    are deduped as id pairs BEFORE the cosine verify, so a pair colliding
-    in several tables is verified once.  T=1 keeps the original
-    single-table shape (the oracle-checked contract configuration).
+    work by ≤ T.  Table t hashes against ``hyperplanes(n_planes, dims)``
+    seeded ``"lsh"`` for t = 0 and ``"lsh/t{t}"`` after, so the
+    multi-table pair set is the union of the single-table pair sets
+    over those seeds, and a superset of the default single table's at
+    equal ``n_planes``.  A pair colliding in several tables is emitted
+    once.  Explicit ``planes`` is one table; passing it with
+    ``n_tables`` > 1 raises.
 
-    ``dims`` MUST match the embedding width when ``n_tables`` > 1 (for a
-    single table pass matching ``planes`` instead); a mismatch would
-    silently degenerate the bucketing to one global bucket (an all-pairs
-    cross join at scale), so the bucket expression raises at runtime on
-    the first mismatched row (see :func:`_guarded_bucket`).
-    ``n_planes`` is the per-table selectivity knob in the multi-table
-    path; table 0 always reuses the default seed so the multi-table
-    candidate set is a superset of the single-table one at equal
-    ``n_planes``.
+    The vector width must equal the plane width (``dims``, or the width
+    of ``planes``): the norm raises on the first mismatched row (see
+    :func:`_guarded_norm`) instead of letting out-of-range reads null
+    every row out of the result or degenerate the bucketing to one
+    global bucket (an all-pairs cross join at scale).
 
-    ``persist_base`` persists the prepared (id, vec, norm[, bucket])
-    table before the self-join — the same signature-table discipline as
-    ``minhash_lsh_pairs``: a self-join evaluates its input subtree once
-    PER SIDE, so when ``corpus`` is itself a computed pipeline (e.g.
-    ``embed_hash`` — scan + tokenize + explode + wide aggregate + fill
-    join) that whole chain would otherwise run twice (measured 15.2 s vs
-    4.7 s end-to-end on the text → ANN chain at sf0.1).  The persisted
-    table is rows × (id + dims doubles + norm) — small relative to the
-    corpus it came from.  Spark's CacheManager holds the entry until
-    unpersist; long-lived sessions issuing many one-shot calls should
-    pass ``persist_base=False`` or clear the cache.
+    The prepared ``(id, payload, norm)`` base is persisted before the
+    self-join, because a self-join evaluates its input subtree once per
+    side: when ``corpus`` is itself a computed pipeline (e.g.
+    ``embed_hash``) that chain would otherwise run twice (measured 15.2 s
+    vs 4.7 s on the text → ANN chain at sf0.1).  Spark's CacheManager
+    holds the entry until unpersist; long-lived sessions issuing many
+    one-shot calls should clear the cache.  Each table is one narrow
+    ``(tbl, bucket)`` projection of that base, unioned under one join,
+    so the payload rides the join and no vector joins back.
     """
-    if n_tables <= 1:
-        planes = planes or hyperplanes(n_planes, dims=dims)
-        dims = len(planes[0])  # guard enforces vec width == plane width
-        # flat scalar columns, not the array, go through the self-join:
-        # the verify reads direct double columns instead of per-element
-        # array gets (see _flat_cols — measured 5× on the verify stage)
-        base = corpus.select(
-            F.col(id_col).alias("id"),
-            *_flat_cols(F.col(vec_col), dims, "x"),
-            vec_norm(F.col(vec_col), dims=dims).alias("nrm"),
-            _guarded_bucket(F.col(vec_col), planes).alias("bucket"),
+    if planes is not None and n_tables > 1:
+        raise ValueError(
+            "pass either explicit planes (single table) or n_tables"
         )
-        # Zero-norm vectors (token-less docs under embed_hash, all-zero
-        # embeddings) all hash to the SAME bucket (every plane dot is
-        # 0 > 0 = false) and every pair they form scores a forced
-        # cosine 0.0 < min_cosine — m such vectors are m²/2 candidate
-        # rows in one straggler bucket that can never emit a pair.
-        # Excluding them from bucketing is output-identical whenever
-        # min_cosine > 0 (kept bucketable at min_cosine ≤ 0, where a
-        # 0.0 pair would legitimately pass).  NULL norms (missing
-        # vectors) fail the predicate too — also unverifiable.
-        if min_cosine > 0:
-            base = base.filter(F.col("nrm") > 0)
-        if persist_base:
-            base = base.persist()
-        left = base.alias("l")
-        right = base.alias("r")
-        return (
-            left.join(right, on="bucket")
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(
-                F.col("l.id").alias("id_a"),
-                F.col("r.id").alias("id_b"),
-                _flat_cosine(
-                    "l.x", "r.x", dims,
-                    norm_a=F.col("l.nrm"), norm_b=F.col("r.nrm"),
-                ).alias("cosine_sim"),
-            )
-            .filter(F.col("cosine_sim") >= min_cosine)
+    tables = [planes] if planes is not None else [
+        hyperplanes(
+            n_planes, dims=dims, seed="lsh" if t == 0 else f"lsh/t{t}"
         )
-    else:
-        if planes is not None:
-            raise ValueError(
-                "pass either explicit planes (single table) or n_tables"
-            )
-        # table 0 reuses the default single-table plane set, so the
-        # multi-table candidate set is a GUARANTEED superset of the
-        # single-table one (and n_tables=1 ≡ the default single table)
-        tables = F.array(*[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _guarded_bucket(
-                    F.col("v"),
-                    hyperplanes(
-                        n_planes, dims=dims,
-                        seed="lsh" if t == 0 else f"lsh/t{t}",
-                    ),
-                ).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ])
-        # prep keeps the array (the bucket tables hash it) PLUS the flat
-        # scalar columns the verify reads (see _flat_cols); it persists
-        # once and feeds the band explode and both pair join-backs.
-        # Past the codegen cutoff the verify reads the array itself, so
-        # the payload IS "v" — no duplicate copy through the persist.
-        vec_srcs = (
-            _flat_names(dims, "x") if dims <= UNROLL_MAX_DIMS else ["v"]
+        for t in range(max(n_tables, 1))
+    ]
+    dims = len(tables[0][0])
+    base = corpus.select(
+        F.col(id_col).alias("id"),
+        *_flat_cols(F.col(vec_col), dims, "x"),
+        _guarded_norm(F.col(vec_col), dims).alias("nrm"),
+    ).persist()
+    # the buckets hash the payload itself: the flat columns re-packed
+    # below the codegen cutoff, the carried array above it
+    payload = _flat_names(dims, "x")
+    vec = F.col(payload[0]) if dims > UNROLL_MAX_DIMS else F.array(*payload)
+    banded = functools.reduce(DataFrame.unionByName, [
+        base.select(
+            "*", F.lit(t).alias("tbl"), lsh_bucket(vec, tp).alias("bucket"),
         )
-        prep = corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            *(
-                _flat_cols(F.col(vec_col), dims, "x")
-                if dims <= UNROLL_MAX_DIMS
-                else []
-            ),
-            vec_norm(F.col(vec_col), dims=dims).alias("nrm"),
-        )
-        # zero/NULL norms: same exclusion as the single-table path (one
-        # shared all-zero bucket per table, pairs forced to cosine 0.0)
-        if min_cosine > 0:
-            prep = prep.filter(F.col("nrm") > 0)
-        if persist_base:
-            prep = prep.persist()
-        # outer + null filter: see textstats.explode_non_null — a plain
-        # explode's inferred size>0 pre-filter re-evaluates the bucket
-        # hashing against the cache scan.  `tables` is never empty.
-        banded = (
-            prep.select("id", F.explode_outer(tables).alias("b"))
-            .filter(F.col("b").isNotNull())
-            .select("id", "b.tbl", "b.bucket")
-        )
-        # id pairs only through the multi-table join + distinct (the
-        # vectors join back afterwards, keyed by the deduped pair set —
-        # same discipline as the MinHash band join)
-        pair_ids = (
-            banded.alias("l")
-            .join(banded.alias("r"), on=["tbl", "bucket"])
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(
-                F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
-            )
-            .distinct()
-        )
-        cand = (
-            pair_ids.join(
-                prep.select(
-                    F.col("id").alias("id_a"),
-                    *[
-                        F.col(src).alias(dst)
-                        for src, dst in zip(vec_srcs, _flat_names(dims, "a"))
-                    ],
-                    F.col("nrm").alias("na"),
-                ),
-                on="id_a",
-            )
-            .join(
-                prep.select(
-                    F.col("id").alias("id_b"),
-                    *[
-                        F.col(src).alias(dst)
-                        for src, dst in zip(vec_srcs, _flat_names(dims, "b"))
-                    ],
-                    F.col("nrm").alias("nb"),
-                ),
-                on="id_b",
-            )
-        )
-        return (
-            cand.select(
-                "id_a",
-                "id_b",
-                _flat_cosine(
-                    "a", "b", dims,
-                    norm_a=F.col("na"), norm_b=F.col("nb"),
-                ).alias("cosine_sim"),
-            )
-            .filter(F.col("cosine_sim") >= min_cosine)
-        )
+        for t, tp in enumerate(tables)
+    ])
+    return _cosine_self_join(
+        banded, ["tbl", "bucket"], dims, min_cosine, dedup=len(tables) > 1,
+    )
 
 
 def semantic_dedup(
@@ -1113,10 +1038,10 @@ def semantic_dedup(
     :data:`EXPR_ASSIGN_MAX_CELLS` cells on the bit-replayable unrolled
     expression and switches bigger quantizers to the Arrow-batched
     matmul argmax — without it, a 50k-cell assignment would be a 50k-
-    struct expression tree per row, which no codegen survives.  Zero-norm vectors (token-less docs) are excluded from
-    pairing whenever ``threshold > 0`` — every pair they form is a
-    forced cosine 0.0 that can never clear the threshold, and m such
-    docs would otherwise be m²/2 dead candidates in one straggler cell —
+    struct expression tree per row, which no codegen survives.  Pairing
+    is the self-join shared with :func:`lsh_ann_pairs`
+    (:func:`_cosine_self_join`), keyed on ``cell``: zero-norm vectors
+    (token-less docs) are excluded from it whenever ``threshold > 0``,
     but they keep their label row (each its own singleton component).
 
     ``train=False`` skips k-means and uses the deterministic seeded
@@ -1128,7 +1053,7 @@ def semantic_dedup(
     The embedding table is persisted for the duration (the trainer scans
     it ``n_iters`` times) and so is the prepared assignment table — the
     latter is NOT only the usual evaluate-once-per-join-side discipline
-    (``lsh_ann_pairs`` ``persist_base``): the self-join carries a
+    (as in :func:`lsh_ann_pairs`): the self-join carries a
     64-attribute cosine filter, and optimizing that filter over the raw
     assignment subtree sends Catalyst's constraint propagation
     (``getAllValidConstraints`` alias substitution) into exponential
@@ -1161,22 +1086,8 @@ def semantic_dedup(
             _guarded_norm(v, dims).alias("nrm"),
             *_flat_cols(v, dims, "x"),
         ).persist()
-        pairable = assigned
-        if threshold > 0:
-            pairable = pairable.filter(F.col("nrm") > 0)
-        pairs = (
-            pairable.alias("l")
-            .join(pairable.alias("r"), on="cell")
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(
-                F.col("l.id").alias("id_a"),
-                F.col("r.id").alias("id_b"),
-                _flat_cosine(
-                    "l.x", "r.x", dims,
-                    norm_a=F.col("l.nrm"), norm_b=F.col("r.nrm"),
-                ).alias("cosine_sim"),
-            )
-            .filter(F.col("cosine_sim") >= threshold)
+        pairs = _cosine_self_join(
+            assigned, ["cell"], dims, threshold, dedup=False
         )
         nodes = emb.select("id")
         # the component loop materializes the edge list (and with it the

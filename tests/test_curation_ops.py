@@ -417,7 +417,7 @@ def test_zero_vectors_never_bucket_at_positive_threshold(spark):
         for r in lsh_ann_pairs(df, planes=planes, min_cosine=0.5).collect()
     }
     assert got == {(1, 2)}
-    # multi-table path: same exclusion
+    # several tables: same exclusion
     got_mt = {
         (r.id_a, r.id_b)
         for r in lsh_ann_pairs(
@@ -924,7 +924,9 @@ def test_lsh_multi_table_recall_superset(spark):
     """T independent tables must actually BUCKET (not degenerate to one
     global bucket — the dims-mismatch footgun), recover the exact-dup
     pair, verify every surfaced pair, beat single-table recall, and
-    still prune (fewer pairs than the brute-force set at the threshold)."""
+    still prune (fewer pairs than the brute-force set at the threshold).
+    The T-table pair set is exactly the union of the single-table runs
+    over the per-table seeds, each pair once."""
     import math
 
     from ocr_spark.similarity import lsh_ann_pairs
@@ -944,12 +946,24 @@ def test_lsh_multi_table_recall_superset(spark):
             df, planes=hyperplanes(8, dims=16), min_cosine=0.2
         ).collect()
     }
-    multi = {
-        (r.id_a, r.id_b): r.cosine_sim
-        for r in lsh_ann_pairs(
-            df, min_cosine=0.2, n_tables=4, dims=16
-        ).collect()
-    }
+    multi_rows = lsh_ann_pairs(
+        df, min_cosine=0.2, n_tables=4, dims=16
+    ).collect()
+    multi = {(r.id_a, r.id_b): r.cosine_sim for r in multi_rows}
+    assert len(multi) == len(multi_rows)  # a pair in k tables emits once
+    per_table = set()
+    for t in range(4):
+        per_table |= {
+            (r.id_a, r.id_b, r.cosine_sim)
+            for r in lsh_ann_pairs(
+                df,
+                planes=hyperplanes(
+                    8, dims=16, seed="lsh" if t == 0 else f"lsh/t{t}"
+                ),
+                min_cosine=0.2,
+            ).collect()
+        }
+    assert {(a, b, c) for (a, b), c in multi.items()} == per_table
     assert (0, 100) in multi and multi[(0, 100)] >= 0.999999
     assert all(v >= 0.2 for v in multi.values())
     assert set(single) <= set(multi)  # table-0 superset guarantee
@@ -1083,6 +1097,15 @@ def test_lsh_dims_mismatch_fails_fast(spark):
     with pytest.raises(Exception, match="width"):
         lsh_ann_pairs(
             df, planes=hyperplanes(4, dims=8), min_cosine=0.0
+        ).collect()
+    # declared wider than the vectors at a positive threshold: the
+    # out-of-range reads must raise, not null every row out of the
+    # zero-norm exclusion and return no pairs
+    with pytest.raises(Exception, match="width"):
+        lsh_ann_pairs(df, min_cosine=0.5, n_tables=2, dims=32).collect()
+    with pytest.raises(Exception, match="width"):
+        lsh_ann_pairs(
+            df, planes=hyperplanes(4, dims=32), min_cosine=0.5
         ).collect()
 
     # a NULL embedding is a missing vector, not a width bug: it must NOT

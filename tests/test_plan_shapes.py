@@ -14,6 +14,7 @@ from ocr_spark.driver_contract import (
     q_extract_pipeline,
     q_orders_by_segment,
 )
+from ocr_spark.similarity import hyperplanes, lsh_ann_pairs
 
 SF = "/root/testdata/sf0.001"
 
@@ -323,3 +324,33 @@ def test_shingle_tokenize_not_inlined_per_gram(spark):
     plan = base._jdf.queryExecution().optimizedPlan().toString()
     n = plan.count("split(trim")
     assert 1 <= n <= 6, f"tokenize inlined {n}x — per-gram re-evaluation?"
+
+
+@pytest.mark.parametrize(
+    "kw, n_aggregates",
+    [({"n_tables": 3, "dims": 16}, 1),
+     ({"planes": hyperplanes(4, dims=16)}, 0)],
+    ids=["n_tables3", "planes"],
+)
+def test_lsh_ann_pairs_one_join(spark, kw, n_aggregates):
+    """lsh_ann_pairs is ONE (tbl, bucket) self-join whatever the table
+    count: the vector payload rides the join, so no pair joins its
+    vectors back.  Only more than one table adds an aggregate — the
+    distinct over pairs that collide in several tables."""
+    import re
+
+    df = spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 5 - 2) for d in range(16)])
+         for i in range(20)],
+        "vec_id bigint, embedding array<float>",
+    )
+    try:
+        out = lsh_ann_pairs(df, min_cosine=0.2, **kw)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.catalog.clearCache()
+    node = r"^[\s:|+-]*{} "
+    assert len(re.findall(node.format("Join"), plan, re.M)) == 1, plan
+    assert len(re.findall(node.format("Aggregate"), plan, re.M)) == (
+        n_aggregates
+    ), plan
