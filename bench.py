@@ -8,8 +8,8 @@ Per-query timing forces *full* materialization via the noop data source
 (`count()` alone would let Catalyst prune expensive columns like the
 extraction-field struct and understate the work).
 
-Noise bracketing: this VM shows ±50-100% wall-clock noise at the
-sub-2-second scale (BENCH/BASELINE.md, round 3), so the suite runs
+Noise bracketing: wall-clock noise at the sub-2-second scale was
+measured at ±50-100% on a shared VM, so the suite runs
 $BENCH_ROUNDS (default 2) full round-robin passes and reports the
 per-query MIN, with a fixed-cost CPU control query interleaved once per
 round — the control's own spread separates host noise from genuine plan
@@ -31,22 +31,20 @@ from ocr_spark.session import get_spark  # noqa: E402
 HEADLINE = [
     "extract_pipeline",      # the flagship: docs/sec end-to-end
     "dedup_minhash_lsh",
-    "dedup_incremental",     # delta-vs-committed-store pairing (round 4)
+    "dedup_incremental",     # delta-vs-committed-store pairing
     "dedup_ngram_jaccard",
     "dedup_simhash_pairs",
     "ann_cosine_topk",
     "ann_lsh_pairs",
-    "text_ann_pairs",        # text → embed_hash → LSH chain (round 4)
-    "doc_stats",             # fused per-doc panel (was quality_score +
-    #                          langid + fingerprint + scrub_pii + simhash16
-    #                          — round-5 registry consolidation)
-    "lm_score",              # corpus unigram-surprisal scoring (round 4)
+    "text_ann_pairs",        # text → embed_hash → LSH chain
+    "doc_stats",             # fused per-doc panel: quality, langid,
+    #                          fingerprint, PII scrub, simhash, probe
+    "lm_score",              # corpus unigram-surprisal scoring
     "dedup_exact",
-    "strip_dup_passages",    # k-gram substring dedup + token cut (round 4)
+    "strip_dup_passages",    # k-gram substring dedup + token cut
     "lineitem_pricing",
     "orders_by_segment",
     "events_sessions_stream",  # sessionization via the streaming drain
-    #                            (the batch twin was retired — same oracle)
     "events_dedup_stream",   # stateful streaming drain (checkpointed)
 ]
 
@@ -103,16 +101,7 @@ def _timed_extract(spark, sf_dir: str) -> float:
 
 
 def main() -> None:
-    import argparse
-
     from ocr_spark.driver_contract import registry
-
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--addendum", metavar="MD",
-                    help="append the JSON result as a harness-generated "
-                         "block to this markdown file (evidence numbers "
-                         "come from the harness, never hand-edits)")
-    args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -132,8 +121,8 @@ def main() -> None:
     rounds = max(1, int(os.environ.get("BENCH_ROUNDS", "2")))
     samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
     controls: list[float] = []
-    _control_run(spark)  # discarded: round-0 JIT/page-cache warmup is not
-    #                      host noise (see BENCH/BASELINE.md round-3 A/B)
+    _control_run(spark)  # discarded: the first run's JIT/page-cache
+    #                      warmup is not host noise (measured in an A/B)
     for r in range(rounds):
         controls.append(round(_control_run(spark), 3))
         for name in HEADLINE:
@@ -187,16 +176,6 @@ def main() -> None:
         "max_query_spread_frac": round(spread, 3),
     }
     print(json.dumps(result))
-    if args.addendum:
-        from tools.mdappend import append_addendum
-
-        stamp = time.strftime("%Y-%m-%d %H:%M")
-        append_addendum(
-            args.addendum,
-            f"\n## Headline suite — sf{sf}, local[{cpus}] "
-            f"(generated by bench.py --addendum, {stamp})\n\n"
-            f"```json\n{json.dumps(result)}\n```\n",
-        )
     spark.stop()
 
 

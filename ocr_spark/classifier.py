@@ -172,9 +172,9 @@ def train_linear_probe(
     (tests/oracle_clf.py, which gates this path under the driver's
     correctness fixture via tools/gen_truth.py).
 
-    Rate guidance (measured, tools/clf_stress.py): signed-hash count
-    features give near-zero-mean gradients, so useful rates run well
-    above the intuition for normalized features — the 20k-doc marker
+    Rate guidance (measured): signed-hash count features give
+    near-zero-mean gradients, so useful rates run well above the
+    intuition for normalized features — the 20k-doc marker
     corpus needed ``lr_ppm ≈ 4_000_000`` (4.0) for 0.96 holdout at 16
     iterations, while the contract default ``250_000`` plateaued at
     0.85.  Watch ``l1_ppm``: a slow monotone decline means raise the

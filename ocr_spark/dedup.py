@@ -340,9 +340,9 @@ def min_shingle_bucket(sh: Column) -> Column:
     """The default blocking key of :func:`ngram_jaccard_pairs` over a
     shingle-hash array: the minimum hash (1-permutation MinHash), -1 for
     shingle-less docs.  Single-sourced so telemetry that measures bucket
-    skew (tools/dedup_stress.py) keys on the SAME expression the
-    operator joins on — a drift would silently report cap behavior for a
-    join that no longer exists."""
+    skew keys on the SAME expression the operator joins on — a drift
+    would silently report cap behavior for a join that no longer
+    exists."""
     return F.coalesce(F.array_min(sh), F.lit(-1))
 
 
@@ -1019,13 +1019,13 @@ def simhash_blocks(
     """``array<struct<block_idx,block_val>>`` — the Manku block-
     permutation candidate key of a simhash signature (Manku/Jain/Sarma
     WWW'07 §3).  Single-sourced (like :func:`min_shingle_bucket` for the
-    ngram path) so candidate-count telemetry (tools/dedup_stress.py)
-    explodes the SAME key the operator joins on — a drift would silently
-    measure blowup for a join that no longer exists.
+    ngram path) so candidate-count telemetry explodes the SAME key the
+    operator joins on — a drift would silently measure blowup for a join
+    that no longer exists.
 
     ``n_blocks`` defaults to ``max_hamming + 1`` contiguous blocks, one
     candidate table per block (key space ``2^(bits/n_blocks)`` each —
-    the round-4 measured scale ceiling: 4 × 2^15 keys is FIXED in n, so
+    the measured scale ceiling: 4 × 2^15 keys is FIXED in n, so
     candidates grow ~n²/2^17 and the operator is infeasible at 10^9
     docs).  **The scale lever is raising** ``n_blocks`` **past that
     minimum**: with ``b`` blocks, a pair within the hamming budget ``h``
@@ -1035,9 +1035,9 @@ def simhash_blocks(
     each key to ``(b−h)·bits/b`` bits — the paper's probe-count vs
     key-width trade.  At ``bits=60, h=3, n_blocks=6`` that is 20 tables
     × 2^30 keys instead of 4 × 2^15: 5× the explode rows, ~2^15× the key
-    space (measured at 150k docs: see BENCH/BASELINE.md round-5 dedup
-    stress — candidates/doc 11.3 → ~0 background).  Row volume per doc
-    is ``C(b, b−h)`` — keep it ≤ the guard below."""
+    space (measured at 150k docs: candidates/doc 11.3 → ~0
+    background).  Row volume per doc is ``C(b, b−h)`` — keep it ≤ the
+    guard below."""
     n_blocks = max_hamming + 1 if n_blocks is None else n_blocks
     if n_blocks > bits:
         raise ValueError("n_blocks blocks must fit in the signature")
@@ -1286,13 +1286,13 @@ def simhash_pairs(
     Scale shape: the join key space is ``n_tables × 2^(key_width)`` —
     4 × 2^15 at the defaults, which is FIXED in n and therefore a
     measured quadratic ceiling (~n²/2^17 candidates; infeasible at 10^9
-    docs — round-4 stress).  TWO levers fix that at scale:
+    docs).  TWO levers fix that at scale:
 
     - ``n_blocks`` > ``max_hamming + 1`` switches to the Manku
       combination scheme (see :func:`simhash_blocks`): same FULL recall
       at hamming ≤ ``max_hamming``, key space widened exponentially
       (n_blocks=6 → 20 tables × 2^30 keys; candidates/doc measured flat
-      at 150k docs, BENCH/BASELINE.md round 5).
+      at 150k docs).
     - ``block_col`` scopes candidates to a caller cohort (language,
       domain, shard) — an expression over ``df``'s columns AND-ed into
       the join key, so cross-cohort pairs are never generated at all.

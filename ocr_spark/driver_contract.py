@@ -2140,7 +2140,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine) is gated by the plain-Python twin in pytest
     (test_semantic_dedup_matches_python_twin /
     test_semantic_dedup_arrow_assignment_matches_expr); cell/candidate
-    telemetry at 150k docs lives in tools/dedup_stress.py."""
+    counts were measured at 150k docs outside the gate."""
     from ocr_spark.similarity import semantic_dedup
 
     out = semantic_dedup(

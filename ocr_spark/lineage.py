@@ -113,6 +113,10 @@ def run_resumable(
 ) -> dict:
     """One (re)run: process every bucket not yet 'done', commit data, then
     commit lineage.  Returns a summary dict for logging/tests."""
+    if n_buckets < 1:
+        # len(skip) >= n_buckets would hold before any work, so the run
+        # would report success having extracted nothing.
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     cfg = cfg or PipelineConfig()
     skip = done_buckets(spark, lineage_dir, run_id, n_buckets)
     if len(skip) >= n_buckets:
@@ -126,10 +130,8 @@ def run_resumable(
     if skip:
         pending = pending.filter(~F.col("bucket").isin(skip))
     # Collected once (bucket-cardinality rows): reused as the emptiness
-    # probe, the lineage rows, AND the summary — one input pass total.
-    # (A separate isEmpty() probe used to cost a FULL extra scan of the
-    # pending input per run; at 100 TB that is a whole table read spent
-    # proving non-emptiness the docs_in count proves anyway.)
+    # probe, the lineage rows, AND the summary — one input pass total;
+    # a separate emptiness probe would be a full extra scan of the input.
     docs_in_rows = (
         pending.groupBy("bucket").agg(F.count(F.lit(1)).alias("docs_in"))
         .collect()
@@ -169,9 +171,7 @@ def run_resumable(
     #   parquet row-group metadata (no data pages are decoded);
     # - bytes_out: the bucket partition directory's committed file bytes
     #   from the filesystem.
-    # This replaces the old full re-read + to_json re-serialization of
-    # every document (a second full pass over the sink, roughly doubling
-    # sink-side cost at scale, for a metrics column).
+    # Neither decodes a document, so the sink is never read a second time.
     pending_ids = [int(r.bucket) for r in docs_in_rows]
     docs_out_rows = (
         spark.read.parquet(out_dir)

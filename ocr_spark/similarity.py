@@ -1032,9 +1032,9 @@ def semantic_dedup(
     ``n_cells`` is the quadratic-discipline lever — grow it linearly
     with the corpus so the mean cell stays bounded (the paper runs 50k
     clusters at web scale for exactly this reason), and watch the
-    per-cell candidate telemetry (tools/dedup_stress.py) for a skewed
-    giant cell.  ``assign_mode`` (see :func:`_assign_cell`) makes large
-    cell counts practical: ``'auto'`` keeps ≤
+    per-cell candidate count (Σ|cell|²/2) for a skewed giant cell.
+    ``assign_mode`` (see :func:`_assign_cell`) makes large cell counts
+    practical: ``'auto'`` keeps ≤
     :data:`EXPR_ASSIGN_MAX_CELLS` cells on the bit-replayable unrolled
     expression and switches bigger quantizers to the Arrow-batched
     matmul argmax — without it, a 50k-cell assignment would be a 50k-

@@ -1,45 +1,9 @@
-"""Evidence-tooling contracts: the marker-aware markdown append (no
-silent loss of harness-written blocks across report regenerations) and
-the platform-probe median (no upper-middle bias on even sample counts)."""
+"""Scaling-evidence tooling: the platform-probe median (no upper-middle
+bias on even sample counts)."""
 
 from __future__ import annotations
 
-from tools.mdappend import MANUAL_MARKER, append_addendum
 from tools.scaling_bench import combine_probes
-
-
-def test_append_creates_file_with_marker(tmp_path):
-    p = str(tmp_path / "new.md")
-    append_addendum(p, "\n## block one\n")
-    content = open(p).read()
-    assert content.startswith(MANUAL_MARKER)
-    assert "## block one" in content
-
-
-def test_append_inserts_marker_into_markerless_file(tmp_path):
-    """A pre-existing file WITHOUT the marker gets one before the block,
-    so a later report regeneration (which preserves only content below
-    the marker) cannot destroy the appended evidence."""
-    p = str(tmp_path / "prior.md")
-    with open(p, "w") as f:
-        f.write("# existing report\nbody\n")
-    append_addendum(p, "\n## stress point\n")
-    content = open(p).read()
-    assert content.index("# existing report") < content.index(MANUAL_MARKER)
-    assert content.index(MANUAL_MARKER) < content.index("## stress point")
-    # everything from the marker on survives a regeneration-style split
-    preserved = MANUAL_MARKER + content.split(MANUAL_MARKER, 1)[1]
-    assert "## stress point" in preserved
-
-
-def test_append_below_existing_marker_accumulates(tmp_path):
-    p = str(tmp_path / "evid.md")
-    append_addendum(p, "\n## a\n")
-    append_addendum(p, "\n## b\n")
-    content = open(p).read()
-    assert content.count(MANUAL_MARKER) == 1
-    tail = content.split(MANUAL_MARKER, 1)[1]
-    assert "## a" in tail and "## b" in tail
 
 
 def test_combine_probes_true_median_on_even_count():

@@ -90,9 +90,12 @@ def test_learn_matches_python_twin_across_partitionings(spark):
     """The learned merge SEQUENCE is a pure function of the corpus —
     exact bigint pair counts + the (count DESC, a ASC, b ASC) total
     order make every round partition-invariant, and the independent
-    twin replays it rule-for-rule."""
+    twin replays it rule-for-rule.  The rules are unique and never carry
+    the end-of-word marker on a left operand (EOW only ends a symbol)."""
     want = _twin_learn([t for _i, t in CORPUS], n_merges=12)
     assert len(want) == 12  # non-vacuous: the corpus supports 12 rounds
+    assert len(set(want)) == len(want)
+    assert all(EOW not in a for a, _b in want)
     docs = _df(spark, CORPUS, "doc_id bigint, text string")
     for parts in (1, 7):
         got = learn_bpe(docs.repartition(parts), n_merges=12)

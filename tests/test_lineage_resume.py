@@ -4,6 +4,7 @@ single-shot run exactly."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.config import PipelineConfig
@@ -95,6 +96,19 @@ def test_lineage_rows_account_for_all_docs(spark, tmp_path):
     assert sum(r.docs_out for r in rows) == N_DOCS
     assert all(r.status == "done" for r in rows)
     assert all(r.bytes_out > 0 for r in rows if r.docs_out > 0)
+
+
+@pytest.mark.parametrize("n_buckets", [0, -3])
+def test_non_positive_bucket_count_is_refused(spark, tmp_path, n_buckets):
+    # len(skip) >= n_buckets holds at once for n_buckets < 1: without
+    # the guard the run reported success having written nothing
+    out = tmp_path / "out"
+    lin = tmp_path / "lineage"
+    spans_df, media_df = _corpus(spark)
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_resumable(spark, spans_df, media_df, str(out), str(lin), "r1",
+                      n_buckets=n_buckets)
+    assert not out.exists() and not lin.exists()
 
 
 def test_lineage_rows_plan_as_local_table_scan(spark, tmp_path):

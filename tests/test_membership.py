@@ -61,7 +61,9 @@ def test_false_positive_rate_in_band(spark):
     m/n ≈ 16, k=4: textbook fpp ≈ (1-e^{-1/4})^4 ≈ 0.24%.  Allow a wide
     band (≤ 8×) so hash luck can't flap the test, but a broken mask or
     word-index computation (fpp → ~100% or exactly 0 with collisions
-    impossible at this m) still fails loudly."""
+    impossible at this m) still fails loudly.  The shuffled probe
+    (``broadcast_bloom=False``, the no-broadcast-ceiling path) must
+    reach the broadcast probe's verdicts, false positives included."""
     n, m_bits = 1000, 1 << 14
     inserted = [py_portable_hash(f"in-{i}") for i in range(n)]
     probed = [py_portable_hash(f"out-{i}") for i in range(2000)]
@@ -70,6 +72,18 @@ def test_false_positive_rate_in_band(spark):
     got = bloom_probe(_keys(spark, probed), bloom, "g", m_bits, k=4).collect()
     fp = sum(1 for r in got if r.might_contain)
     assert fp / 2000 <= 8 * 0.0024, f"fp rate {fp / 2000:.4f} out of band"
+    both = _keys(spark, inserted + probed)
+    broadcast, shuffled = (
+        {
+            r.g: r.might_contain
+            for r in bloom_probe(
+                both, bloom, "g", m_bits, k=4, broadcast_bloom=flag
+            ).collect()
+        }
+        for flag in (True, False)
+    )
+    assert len(broadcast) == n + 2000
+    assert shuffled == broadcast
 
 
 def test_positions_match_python_twin(spark):
@@ -415,6 +429,115 @@ def test_bloom_store_compaction_invisible_to_probe(spark, tmp_path):
     bloom_store_append(io, _keys(spark, [7, 8]), "g", "seen", 4096, 4)
     with pytest.raises(ValueError, match="mixed"):
         bloom_store_fold(io.read(spark, "seen")).collect()
+
+
+@pytest.mark.parametrize(
+    "order", ["append_inside_compaction", "compaction_inside_append"]
+)
+def test_bloom_compaction_races_tagged_append(
+    spark, tmp_path, monkeypatch, order
+):
+    """``compact_store.py --mode bloom-or`` racing an in-flight tagged
+    registry append, interleaved deterministically at the writer lock:
+
+    * ``append_inside_compaction`` — the append commits between the
+      fold's manifest load and its swap: the swap must abort
+      (ConcurrentWriteError, store untouched), and a re-run compacts;
+    * ``compaction_inside_append`` — the compaction commits between the
+      append's data write and its manifest swap: the append then lands
+      as a snapshot after the compacted one.
+
+    Either way every committed bitmap word survives, every committed tag
+    is still refused on replay, and probes equal a fresh one-shot
+    build."""
+    from jobs.compact_store import main as compact_main
+    from ocr_spark.membership import bloom_store_append, bloom_store_read
+    from ocr_spark.tableio import (
+        ConcurrentWriteError,
+        DuplicateTagError,
+        ParquetManifestIO,
+    )
+
+    m_bits, k = 8192, 4
+    store = str(tmp_path / "store")
+    io = ParquetManifestIO(store)
+
+    class Tagged:
+        """The registry seam with a commit tag on every append."""
+
+        def __init__(self, tag):
+            self.tag = tag
+
+        def append(self, df, table):
+            return io.append(df, table, tag=self.tag)
+
+    runs = [
+        [py_portable_hash(f"race{run}-{i}") for i in range(100)]
+        for run in range(3)
+    ]
+    for run in (0, 1):
+        bloom_store_append(
+            Tagged(f"run/{run}"), _keys(spark, runs[run]), "g", "seen",
+            m_bits, k,
+        )
+
+    def compact():
+        compact_main(["--store", store, "--table", "seen",
+                      "--mode", "bloom-or", "--vacuum"])
+
+    def racing_append():
+        bloom_store_append(
+            Tagged("run/2"), _keys(spark, runs[2]), "g", "seen", m_bits, k
+        )
+
+    # the first writer-lock entry belongs to the outer operation: run
+    # the inner one to completion there, before the outer swap; later
+    # entries pass straight through
+    orig_lock = ParquetManifestIO._writer_lock
+    inner = racing_append if order == "append_inside_compaction" else compact
+    fired = []
+
+    def lock_after_inner(self, table, timeout_s=60.0):
+        if not fired:
+            fired.append(table)
+            inner()
+        return orig_lock(self, table, timeout_s=timeout_s)
+
+    monkeypatch.setattr(ParquetManifestIO, "_writer_lock", lock_after_inner)
+    if order == "append_inside_compaction":
+        with pytest.raises(ConcurrentWriteError, match="re-run"):
+            compact()
+        assert io.snapshots("seen") == [0, 1, 2]  # store untouched
+        compact()
+        assert io.snapshots("seen") == [2]
+    else:
+        racing_append()
+        assert io.snapshots("seen") == [1, 2]  # compacted, then appended
+    assert fired == ["seen"]
+
+    every_key = runs[0] + runs[1] + runs[2]
+    one_shot = bloom_build(_keys(spark, every_key), "g", m_bits, k)
+    stored = bloom_store_read(io, spark, "seen", m_bits, k)
+    assert {r.word_idx: r.word for r in stored.collect()} == {
+        r.word_idx: r.word for r in one_shot.collect()
+    }
+    for run in range(3):
+        with pytest.raises(DuplicateTagError):
+            bloom_store_append(
+                Tagged(f"run/{run}"), _keys(spark, runs[run]), "g", "seen",
+                m_bits, k,
+            )
+    probes = _keys(
+        spark, every_key + [py_portable_hash(f"x-{i}") for i in range(200)]
+    )
+
+    def verdicts(bitmap):
+        return {
+            r.g: r.might_contain
+            for r in bloom_probe(probes, bitmap, "g", m_bits, k).collect()
+        }
+
+    assert verdicts(stored) == verdicts(one_shot)
 
 
 def test_fold_refuses_disjoint_word_index_geometries(spark, tmp_path):
