@@ -292,48 +292,64 @@ def exact_duplicates_incremental(
     Input: ``(id, digest)`` tables from :func:`exact_digests` (the
     committed side read back through the tableio seam).  Output, one row
     per NEW doc: ``(id, digest, dup_of_committed, new_canonical_id,
-    kept)`` with ``kept = ¬dup_of_committed ∧ id = new_canonical_id``.
-    Append the kept rows' digests to the store to commit the run.
+    kept)`` with ``kept = ¬dup_of_committed ∧ id = new_canonical_id``,
+    followed by any further ``new_digests`` columns, which ride through
+    untouched (a caller carries its document rows to the kept-set
+    without joining them back).  Append the kept rows' digests to the
+    store to commit the run.
 
     ``new_canonical_id`` is NULL on ``dup_of_committed`` rows: the
     delta's min id is itself dropped there (the committed copy wins), so
     an auditor grouping by it would attribute docs to a ghost.  The true
     committed canonical is a store lookup away (join the store on
     ``digest``); emitting NULL keeps this operator free of any
-    committed-side grouping (the store contributes a distinct digest
-    probe only — see the shape note below).
+    committed-side grouping (the store contributes a digest probe only —
+    see the shape note below).
 
-    Shape for 100 TB: one groupBy(digest) over the DELTA only (min id),
-    rejoined on the same key (no extra shuffle — the partitioning is
-    reused), plus one left join of delta digests against the store,
-    digest-keyed; the committed side contributes a scan and the join
-    probe, never a committed × committed grouping.  (The store digests
-    are ``distinct``-ed before the probe — a shuffle that is pure
-    defense when the store follows the kept-rows-only commit protocol,
-    which keeps it digest-unique by construction, but prevents silent
-    row multiplication if a caller committed a raw batch.)
+    Shape for 100 TB: one window ``min(id)`` over the DELTA only,
+    partitioned by digest (one shuffle and no grouped side to join
+    back; a hot digest's group is buffered in one task, spilling past
+    memory), plus one IN-subquery probe of delta digests against the store,
+    digest-keyed; the committed side contributes a scan and the probe's
+    build, never a committed × committed grouping.  (The probe plans as
+    an existence join: it flags each delta row once whatever the store
+    holds, so a store that is not digest-unique — a caller committed a
+    raw batch — cannot multiply rows, and needs no defensive
+    ``distinct``.)
     Precondition: new ids are disjoint from committed ids (the store
     append is the commit point), mirroring
     :func:`incremental_minhash_pairs`."""
-    canon = new_digests.groupBy("digest").agg(
-        F.min("id").alias("new_canonical_id")
+    from pyspark.sql import Window
+
+    flagged = new_digests.withColumn(
+        "new_canonical_id", F.min("id").over(Window.partitionBy("digest"))
     )
-    flagged = new_digests.join(canon, on="digest")
+    dup = F.lit(False)
     if committed_digests is not None:
-        hits = committed_digests.select("digest").distinct().select(
-            "digest", F.lit(True).alias("dup_of_committed")
-        )
-        flagged = flagged.join(hits, on="digest", how="left")
-        dup = F.coalesce(F.col("dup_of_committed"), F.lit(False))
-    else:
-        dup = F.lit(False)
+        dup = F.col("digest").isin(committed_digests.select("digest"))
     return flagged.select(
         "id",
         "digest",
         dup.alias("dup_of_committed"),
         F.when(~dup, F.col("new_canonical_id")).alias("new_canonical_id"),
         (~dup & (F.col("id") == F.col("new_canonical_id"))).alias("kept"),
+        *[c for c in new_digests.columns if c not in ("id", "digest")],
     )
+
+
+def raise_on_id_overlap(
+    n_overlap: int, lo, hi, subject: str, rule: str
+) -> None:
+    """The fresh-ids guard's verdict, shared by every writer of a
+    committed store: ``n_overlap`` new ids already committed, ``lo`` and
+    ``hi`` the least and greatest of them (one aggregate finds all three
+    — no ``limit`` that steps up over partitions to prove an empty
+    overlap).  Raises ``ValueError`` naming the examples, then ``rule``."""
+    if n_overlap:
+        raise ValueError(
+            f"{subject} overlap the committed store ({n_overlap} "
+            f"overlapping, e.g. {sorted({lo, hi})}); {rule}"
+        )
 
 
 def min_shingle_bucket(sh: Column) -> Column:
@@ -1778,18 +1794,15 @@ def incremental_signature_delta(
                 docs[id_col] == F.col("_store_id"),
                 "leftsemi",
             )
-            .select(id_col)
-            .limit(5)
-            .collect()
+            .agg(F.count(F.lit(1)), F.min(id_col), F.max(id_col))
+            .first()
         )
-        if overlap:
-            raise ValueError(
-                "delta doc ids overlap committed store ids (e.g. "
-                f"{sorted(r[id_col] for r in overlap)}); each run must "
-                "submit a disjoint id range — the store append is the "
-                "commit point, so a retried range means the prior run "
-                "committed and this submission would double-count it"
-            )
+        raise_on_id_overlap(
+            *overlap, "delta doc ids",
+            "each run must submit a disjoint id range — the store append "
+            "is the commit point, so a retried range means the prior run "
+            "committed and this submission would double-count it",
+        )
     committed_digests = (
         committed_doc_rows.select("id", "digest")
         if committed_doc_rows is not None else None

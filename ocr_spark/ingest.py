@@ -48,13 +48,28 @@ overwrite is idempotent; after (4) the tag short-circuits.  Both exact
 modes — ``(doc_id, text)`` rows and extracted span sequences — run this
 order through the one function :func:`_dedup_commit`.
 
-Scale shape: per batch, one groupBy(digest) over the BATCH only, one
-digest-keyed join of batch digests against the store probe (Bloom-pruned
-to the might-contain survivors when the registry is on — at a 10^12-doc
-store the registry bitmap is what keeps the probe join's build side from
-being the whole store), and one narrow append.  The committed corpus is
-never re-grouped.  Store growth is one snapshot per batch — fold with
-``jobs/compact_store.py`` (tags survive compaction).
+The fresh-ids guard (a batch must not re-submit committed doc ids under
+a new tag) runs in the action that computes the verdict: after the
+registry prune, before the registry backfill and append, the docs write
+and the store append.  Its place after the prune is safe because the
+prune only reads the registry and narrows the verdict's probe, never the
+guard's, which reads the full store.  A refused batch therefore leaves
+the store and the registry as it found them — a batch that would have
+enabled the registry on a store without one creates none.
+
+Scale shape: per batch, ONE action materializes the persisted verdict
+and aggregates its counts.  It runs a window min(id) over the BATCH's
+digests (one shuffle), an IN-subquery probe of batch digests against
+the store probe (Bloom-pruned to the might-contain survivors when the
+registry is on — at a 10^12-doc store the registry bitmap is what keeps
+the probe's build side from being the whole store), and the fresh-ids
+check, an IN-subquery of batch ids against the full store.  With the
+registry on, the survivor count runs first, over the cached digested
+batch that the verdict then reads.  The docs write (round-robin
+rebalanced, so AQE sizes its files) and the narrow store append read
+that one cache back; nothing is counted after the append.  The
+committed corpus is never re-grouped.  Store growth is one snapshot per
+batch — fold with ``jobs/compact_store.py`` (tags survive compaction).
 """
 
 from __future__ import annotations
@@ -64,7 +79,9 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_spark.dedup import exact_digests, exact_duplicates_incremental
+from ocr_spark.dedup import (
+    exact_digest, exact_duplicates_incremental, raise_on_id_overlap,
+)
 from ocr_spark.tableio import DuplicateTagError, ParquetManifestIO
 from ocr_spark.textstats import portable_hash
 
@@ -105,7 +122,7 @@ def ingest_batch(
     )
     if done is None:
         return _replayed(batch_id, tag)
-    snap, n_in, n_kept, n_pruned = done
+    snap, _, n_in, n_kept, n_pruned = done
     return {
         "batch_id": batch_id,
         "tag": tag,
@@ -157,15 +174,16 @@ def _dedup_commit(
     deduplicated on the digest of ``content``, a Column over ``docs``,
     against the committed ``store_table``; the kept rows land in
     ``out_dir``'s batch partition and their digests commit under
-    ``tag``.  Rows whose ``content`` is NULL have no digest
-    (:func:`exact_digests` excludes them to avoid a bogus NULL-digest
-    group) — they ride through unscreened rather than vanish:
-    content-less rows can't be duplicates, and dropping data silently
-    is never this pipeline's job.
+    ``tag``.  Rows whose ``content`` is NULL have no digest (they must
+    not collapse into one bogus NULL-digest group) — they ride through
+    unscreened rather than vanish: content-less rows can't be
+    duplicates, and dropping data silently is never this pipeline's
+    job.
 
     Returns None when the batch already committed (its tag is in the
-    store), else ``(snapshot, digested rows, kept rows, registry
-    survivors)``; the survivor count is None without a registry prune.
+    store), else ``(snapshot, rows in, digested rows, kept rows,
+    registry survivors)``; the survivor count is None without a
+    registry prune.
     """
     if tag in io.tags(store_table):
         return None
@@ -184,97 +202,133 @@ def _dedup_commit(
             "registry geometry, or drop the registry table explicitly"
         )
 
-    # batch-sized, consumed by up to four actions (disjointness guard,
-    # verdict, registry append, store append) — one cache, dropped on
-    # exit.  The try opens HERE: the disjointness fail-fast and the
-    # registry reads are designed failure paths, and a driver that
-    # catches per-batch errors and continues must not accrete one
-    # leaked cache per failed batch.
-    new_digests = exact_digests(
-        docs.select("doc_id", content.alias("text"))
-    ).persist()
-    kept_ids = survivors_cache = n_pruned = None
+    # the persisted verdict is the commit's one batch-sized cache (a
+    # registry prune adds the digested batch and its survivors): ONE
+    # action (the aggregate below) materializes it, and the registry
+    # append, the docs write and the store append read it back.  The
+    # try opens HERE: the fresh-ids fail-fast and the registry reads
+    # are designed failure paths, and a driver that catches per-batch
+    # errors and continues must not accrete one leaked cache per failed
+    # batch.
+    rows = docs.select(
+        F.col("doc_id").alias("id"),
+        content.alias("_content"),
+        F.struct(*docs.columns).alias("_doc"),
+    )
+    new_digests = rows.filter(F.col("_content").isNotNull()).select(
+        "id", exact_digest(F.col("_content")).alias("digest"), "_doc"
+    )
+    caches: list[DataFrame] = []
+    n_pruned = None
     try:
-        committed = (
+        committed = probe = (
             io.read(spark, store_table) if io.exists(store_table) else None
         )
-        if committed is not None:
-            if enforce_disjoint_ids:
-                # same precondition + fail-fast as
-                # jobs/run_dedup_incremental: a batch re-submitting
-                # committed ids under a NEW tag (e.g. span files
-                # re-dropped under new names — the checkpoint skips
-                # FILES, not content) would double-commit digests and
-                # corrupt first-run-wins semantics.
-                overlap = (
-                    new_digests.select("id")
-                    .join(committed.select("id"), on="id", how="left_semi")
-                    .limit(3)
-                    .collect()
-                )
-                if overlap:
-                    raise ValueError(
-                        f"batch {batch_id}: doc ids overlap the "
-                        "committed store (e.g. "
-                        f"{sorted(r.id for r in overlap)}); each batch "
-                        "must carry fresh ids — a replay of an "
-                        "already-committed batch is detected by TAG, "
-                        "not by resubmitting ids under a new tag"
-                    )
-            if registry_m_bits is not None:
-                if not io.exists(registry):
-                    # registry enabled on a PRE-EXISTING store: back-
-                    # fill every committed digest first, or the probe
-                    # would report false negatives for them and admit
-                    # duplicates (registry ⊇ store is the invariant the
-                    # 'no false negatives' argument rests on).  One
-                    # pass over the store, once per store lifetime; a
-                    # crash after this append just leaves a registry
-                    # that over-contains committed — the safe side.
-                    _registry_append(
-                        io, committed, store_table, registry_m_bits
-                    )
-                committed, n_pruned, survivors_cache = _registry_prune(
-                    spark, io, new_digests, committed, store_table,
-                    registry_m_bits,
-                )
+        # registry enabled on a PRE-EXISTING store: the backfill waits
+        # for the fresh-ids guard, so a refused batch leaves the store
+        # registry-less
+        prune = committed is not None and registry_m_bits is not None
+        backfill = prune and not io.exists(registry)
+        if prune and not backfill:
+            # the survivor count is an action of its own: the cached
+            # digested batch serves it and the verdict
+            new_digests = new_digests.persist()
+            caches.append(new_digests)
+            survivors = _registry_survivors(
+                spark, io, new_digests, store_table, registry_m_bits
+            ).persist()     # consumed by the count and the semi-join
+            caches.append(survivors)
+            n_pruned = survivors.count()
+            probe = committed.join(
+                survivors,
+                on=portable_hash(F.col("digest")) == survivors["g"],
+                how="left_semi",
+            )
 
-        verdict = exact_duplicates_incremental(new_digests, committed)
-        kept_ids = verdict.filter(F.col("kept")).select("id").persist()
-        kept_docs = docs.filter(content.isNull()).unionByName(
-            docs.join(
-                kept_ids.withColumnRenamed("id", "doc_id"),
-                on="doc_id", how="left_semi",
+        # content-less rows ride through unscreened: kept, no digest
+        verdict = exact_duplicates_incremental(new_digests, probe).select(
+            "id", "digest", "kept", "_doc"
+        ).unionByName(
+            rows.filter(F.col("_content").isNull()).select(
+                "id",
+                F.lit(None).cast("string").alias("digest"),
+                F.lit(True).alias("kept"),
+                "_doc",
             )
         )
+        stale = F.lit(False)
+        if committed is not None and enforce_disjoint_ids:
+            # same precondition + fail-fast as jobs/run_dedup_incremental:
+            # a batch re-submitting committed ids under a NEW tag (e.g.
+            # span files re-dropped under new names — the checkpoint
+            # skips FILES, not content) would double-commit digests and
+            # corrupt first-run-wins semantics.  Checked against the
+            # FULL store (an IN-subquery existence join: it flags, never
+            # multiplies rows), not the registry-pruned probe.
+            stale = F.col("id").isin(committed.select("id"))
+        verdict = verdict.withColumn("stale", stale).persist()
+        caches.append(verdict)
+        counts = verdict.agg(
+            F.count(F.lit(1)).alias("n_in"),
+            F.count("digest").alias("n_digested"),
+            F.count_if(F.col("kept") & F.col("digest").isNotNull())
+            .alias("n_kept"),
+            F.count_if("stale").alias("n_stale"),
+            F.min(F.when(F.col("stale"), F.col("id"))).alias("stale_lo"),
+            F.max(F.when(F.col("stale"), F.col("id"))).alias("stale_hi"),
+        ).first()
+        raise_on_id_overlap(
+            counts.n_stale, counts.stale_lo, counts.stale_hi,
+            f"batch {batch_id}: doc ids",
+            "each batch must carry fresh ids — a replay of an "
+            "already-committed batch is detected by TAG, not by "
+            "resubmitting ids under a new tag",
+        )
+        kept = verdict.filter(F.col("kept"))
 
         if registry_m_bits is not None:
+            digested = verdict.filter(F.col("digest").isNotNull())
+            if backfill:
+                # backfill every committed digest first, or later probes
+                # would report false negatives for them and admit
+                # duplicates (registry ⊇ store is the invariant the 'no
+                # false negatives' argument rests on).  One pass over
+                # the store, once per store lifetime; a crash after this
+                # append just leaves a registry that over-contains
+                # committed — the safe side.
+                _registry_append(io, committed, store_table, registry_m_bits)
+                n_pruned = _registry_survivors(
+                    spark, io, digested, store_table, registry_m_bits
+                ).count()
             # registry BEFORE docs/store (module docstring, ordering
             # rule 2: crash between the appends must over-contain, so
             # future probes get false positives, never false negatives)
-            _registry_append(io, new_digests, store_table, registry_m_bits)
+            _registry_append(io, digested, store_table, registry_m_bits)
 
-        _write_batch_partition(kept_docs, batch_id, out_dir)
+        # round-robin rebalance: AQE sizes the files by the session's
+        # advisory partition size, not one small file per verdict
+        # partition
+        _write_batch_partition(
+            kept.select("_doc.*").hint("rebalance"), batch_id, out_dir
+        )
 
         # commit point: kept rows only (keeps the store digest-unique by
-        # construction — the probe's defensive distinct never multiplies)
-        kept_digest_rows = new_digests.join(
-            kept_ids, on="id", how="left_semi"
-        )
+        # construction)
         try:
-            snap = io.append(kept_digest_rows, store_table, tag=tag)
+            snap = io.append(
+                kept.filter(F.col("digest").isNotNull())
+                .select("id", "digest"),
+                store_table, tag=tag,
+            )
         except DuplicateTagError:
             # a racing replay won the lock between our tags() check and
             # the append; its docs overwrite carried the same content
             return None
-        return snap, new_digests.count(), kept_ids.count(), n_pruned
+        return snap, counts.n_in, counts.n_digested, counts.n_kept, n_pruned
     finally:
-        new_digests.unpersist()
-        if kept_ids is not None:
-            kept_ids.unpersist()
-        if survivors_cache is not None:
-            survivors_cache.unpersist()  # one cache per BATCH — a
-            # continuous stream would otherwise accrete one forever
+        for cache in caches:
+            cache.unpersist()  # one set per BATCH — a continuous
+            # stream would otherwise accrete them forever
 
 
 def _registry_table(store_table: str) -> str:
@@ -299,18 +353,16 @@ def _registry_append(
     )
 
 
-def _registry_prune(
-    spark, io, new_digests: DataFrame, committed: DataFrame,
-    store_table: str, m_bits: int,
-):
-    """Shrink the store probe to digests the registry says MIGHT be
-    committed.  No false negatives (every committed digest's bits are
-    set — the registry commits before the store, so it can only
-    over-contain); false positives just ride through to the exact join.
-    Returns (pruned committed-side, survivor count, survivors cache to
-    unpersist after the batch commits) — the committed side is filtered
-    by semi-join against the surviving batch digests, so the exact
-    join's build input is |survivors|-bounded, not |store|."""
+def _registry_survivors(
+    spark, io, digests: DataFrame, store_table: str, m_bits: int
+) -> DataFrame:
+    """The distinct Bloom keys ``g`` of ``digests`` that the registry
+    says MIGHT be committed.  No false negatives (every committed
+    digest's bits are set — the registry commits before the store, so
+    it can only over-contain); false positives just ride through to the
+    exact join.  A semi-join of the store against them is the pruned
+    probe, so the exact join's build input is |survivors|-bounded, not
+    |store|."""
     from ocr_spark.membership import (
         DEFAULT_K, bloom_probe, bloom_store_read,
     )
@@ -318,20 +370,9 @@ def _registry_prune(
     m, k = m_bits, DEFAULT_K
     bitmap = bloom_store_read(io, spark, _registry_table(store_table), m, k)
     probed = bloom_probe(
-        _registry_key(new_digests).distinct(), bitmap, "g", m, k
+        _registry_key(digests).distinct(), bitmap, "g", m, k
     )
-    survivors = (
-        probed.filter(F.col("might_contain"))
-        .select("g")
-        .persist()          # consumed by the count and the semi-join
-    )
-    n_survivors = survivors.count()
-    pruned = committed.join(
-        survivors,
-        on=portable_hash(F.col("digest")) == survivors["g"],
-        how="left_semi",
-    )
-    return pruned, n_survivors, survivors
+    return probed.filter(F.col("might_contain")).select("g")
 
 
 def _start_ingest_stream(
@@ -626,8 +667,7 @@ def extract_ingest_batch(
         )
         if done is None:
             return _replayed(batch_id, tag)
-        snap, n_digestable, n_kept, _ = done
-        n_in = docs.count()
+        snap, n_in, n_digestable, n_kept, _ = done
         return {
             "batch_id": batch_id,
             "tag": tag,

@@ -214,14 +214,15 @@ def test_crash_before_store_commit_converges(
 
 @pytest.mark.parametrize(
     "make, jobs",
-    [(_exact_batches, 18), (_extract_batches, 27)],
+    [(_exact_batches, 10), (_extract_batches, 17)],
     ids=["ingest_batch", "extract_ingest_batch"],
 )
 def test_ingest_batch_spark_job_count(spark, tmp_path, make, jobs):
     """A non-first batch runs a fixed number of Spark jobs (every job the
     call starts, counted by job group through the status tracker): the
-    commit path's reads, guard, verdict, write, append and counts.  A
-    change to the commit path that adds or drops a pass moves this pin."""
+    store read, the one verdict action (guard and counts included), the
+    write and the append.  A change to the commit path that adds or
+    drops a pass moves this pin."""
     run, (docs0, docs1), _, _ = make(spark)
     io = ParquetManifestIO(str(tmp_path / "store"))
     out = str(tmp_path / "out")
@@ -301,13 +302,58 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
 
 
 def test_overlapping_ids_rejected(spark, tmp_path):
+    """A committed id re-sent under a NEW batch id is refused before the
+    batch commits anything: the error names the ids, the store keeps its
+    one snapshot and no ``batch_id=1`` partition is written.  Enabling
+    the registry in that batch (the backfill path) leaves the store
+    registry-less.  With ``enforce_disjoint_ids=False`` the same batch
+    commits."""
+    import os
+
+    for registry_m_bits in (None, 1 << 12):
+        root = tmp_path / str(registry_m_bits)
+        io = ParquetManifestIO(str(root / "store"))
+        out = str(root / "out")
+        ingest_batch(
+            spark, synthetic_documents(spark, 50, start=0), 0, io, out
+        )
+        resubmit = synthetic_documents(spark, 50, start=25)
+        with pytest.raises(ValueError, match=r"overlap .*\[25, "):
+            ingest_batch(
+                spark, resubmit, 1, io, out,
+                registry_m_bits=registry_m_bits,
+            )
+        assert len(io.snapshots("digests")) == 1
+        assert not os.path.exists(os.path.join(out, "batch_id=1"))
+        assert not io.exists("digests_bloom")
+
+        stats = ingest_batch(
+            spark, resubmit, 1, io, out,
+            registry_m_bits=registry_m_bits, enforce_disjoint_ids=False,
+        )
+        assert not stats["replayed"]
+        assert len(io.snapshots("digests")) == 2
+        assert os.path.isdir(os.path.join(out, "batch_id=1"))
+        assert io.exists("digests_bloom") == (registry_m_bits is not None)
+
+
+def test_batch_partition_is_one_file_for_a_small_batch(spark, tmp_path):
+    """A few hundred rows spread over 8 partitions commit ONE parquet
+    file: AQE coalesces the commit write's round-robin rebalance to the
+    session's advisory size instead of writing a file per verdict
+    partition."""
+    import os
+
     io = ParquetManifestIO(str(tmp_path / "store"))
     out = str(tmp_path / "out")
-    ingest_batch(spark, synthetic_documents(spark, 50, start=0), 0, io, out)
-    with pytest.raises(ValueError, match="overlap"):
-        ingest_batch(
-            spark, synthetic_documents(spark, 50, start=25), 1, io, out
-        )
+    docs = synthetic_documents(spark, 300, start=0).repartition(8)
+    stats = ingest_batch(spark, docs, 5, io, out)
+    files = [
+        f for f in os.listdir(os.path.join(out, "batch_id=5"))
+        if f.endswith(".parquet")
+    ]
+    assert len(files) == 1
+    assert spark.read.parquet(out).count() == stats["docs_kept"]
 
 
 def test_null_text_rides_through(spark, tmp_path):
@@ -637,6 +683,8 @@ def test_extract_ingest_rejects_overlapping_ids(spark, tmp_path):
     """extract_ingest_batch now carries the same disjoint-ids fail-fast
     as ingest_batch: re-submitting a committed doc_id (outside the tag
     replay path) must error, not silently double-commit."""
+    import os
+
     from ocr_spark.fixtures import corpus_dataframes
     from ocr_spark.ingest import extract_ingest_batch
 
@@ -645,5 +693,15 @@ def test_extract_ingest_rejects_overlapping_ids(spark, tmp_path):
     out = str(tmp_path / "out")
     s0 = extract_ingest_batch(spark, spans, media, 0, io, out)
     assert s0["docs_in"] == 6
-    with pytest.raises(ValueError, match="overlap the committed store"):
+    with pytest.raises(
+        ValueError, match=r"overlap the committed store .*'doc_000000'"
+    ):
         extract_ingest_batch(spark, spans, media, 1, io, out)
+    # refused before any commit: one store snapshot, no batch 1 output
+    assert len(io.snapshots("doc_digests")) == 1
+    assert not os.path.exists(os.path.join(out, "batch_id=1"))
+    s1 = extract_ingest_batch(
+        spark, spans, media, 1, io, out, enforce_disjoint_ids=False
+    )
+    assert not s1["replayed"] and s1["docs_in"] == 6
+    assert len(io.snapshots("doc_digests")) == 2
