@@ -27,7 +27,7 @@ itself:
    leaves the store at its previous snapshot and the whole run is
    retryable (under a fresh ``--out``).  Read-side, current labels =
    stored labels with accumulated merges applied (min-reachable over the
-   rename graph — see ``_current_labels``).
+   rename graph — see ``ocr_spark.dedup.current_store_labels``).
 
 Because sketches and digests are pure per-document functions, the union
 of every run's outputs equals the one-shot full-corpus result (pinned by
@@ -50,16 +50,6 @@ import sys
 # Local runs (`python jobs/run_dedup_incremental.py`) put jobs/ on
 # sys.path, not the repo root; on a cluster --py-files ships the package.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _current_labels(committed):
-    """Alias for :func:`ocr_spark.dedup.current_store_labels` — the
-    store's canonical read path lives in the library (``--py-files``
-    deployments ship only the ``ocr_spark`` package); kept here so
-    existing callers and tests keep one import site per job."""
-    from ocr_spark.dedup import current_store_labels
-
-    return current_store_labels(committed)
 
 
 def main(argv: list[str] | None = None) -> dict:
@@ -86,12 +76,10 @@ def main(argv: list[str] | None = None) -> dict:
                         "two racing retries commit exactly once")
     args = p.parse_args(argv)
 
-    from pyspark.sql import functions as F
-
-    from ocr_spark.corpus import synthetic_documents
-    from ocr_spark.dedup import incremental_signature_delta
     from pyspark.sql import SparkSession
 
+    from ocr_spark.corpus import synthetic_documents
+    from ocr_spark.ingest import _signature_commit
     from ocr_spark.session import get_spark
     from ocr_spark.tableio import ParquetManifestIO
 
@@ -107,71 +95,26 @@ def main(argv: list[str] | None = None) -> dict:
             p.error("--docs required unless --synthetic")
         docs = spark.read.parquet(args.docs)
 
-    io = ParquetManifestIO(args.store)
-    if args.tag is not None and args.tag in io.tags("signatures"):
-        # cheap short-circuit before any Spark work; the authoritative
-        # race-free refusal is the tagged append's own lock-held check
-        summary = {"replayed": True, "tag": args.tag}
-        json.dump(summary, sys.stdout)
-        print()
-        if owns_session:
-            spark.stop()
-        return summary
-    has_store = io.exists("signatures")
-    # A store in the pre-unification digests/sketches layout must fail
-    # LOUDLY: treating it as empty would silently re-keep every
-    # committed duplicate and start a fresh history beside the stale one.
-    if not has_store:
-        legacy = [t for t in ("digests", "sketches") if io.exists(t)]
-        if legacy:
-            raise SystemExit(
-                f"store {args.store!r} uses the removed two-table layout "
-                f"({', '.join(legacy)}); migrate it into one 'signatures' "
-                "table (id, digest, sh, sig, cluster_id, role='doc') "
-                "before running"
+    def write_outputs(delta):
+        for name in ("exact", "pairs", "clusters"):
+            delta[name].write.mode("errorifexists").parquet(
+                f"{args.out}/{name}"
             )
-    committed = io.read(spark, "signatures") if has_store else None
 
-    # compute core shared with the streaming wrapper (exact pass,
-    # near-dup over exact survivors, incremental cluster maintenance,
-    # store-row assembly, id-disjointness precondition) — ONE definition
-    # in the library so the two deployment shapes cannot drift
+    # the commit body shared with the streaming wrapper
+    # (ocr_spark.ingest.neardup_ingest_batch): tag short-circuit, legacy
+    # layout refusal, the delta, one atomic store snapshot (see the
+    # module docstring for why the store pieces must not commit
+    # separately) and the counts
     try:
-        delta = incremental_signature_delta(
-            docs, committed, threshold=args.threshold
+        summary = _signature_commit(
+            spark, docs, ParquetManifestIO(args.store), args.tag,
+            args.threshold, write_outputs,
         )
     except ValueError as e:
         raise SystemExit(str(e))
-    exact, pairs, inc = delta["exact"], delta["pairs"], delta["clusters"]
-    exact.write.mode("errorifexists").parquet(f"{args.out}/exact")
-    pairs.write.mode("errorifexists").parquet(f"{args.out}/pairs")
-    inc.write.mode("errorifexists").parquet(f"{args.out}/clusters")
-
-    # commit — kept rows' (digest, sketch, cluster label) plus this run's
-    # merge records become the next run's committed side, in ONE atomic
-    # snapshot (see the module docstring for why the store pieces must
-    # not commit separately).
-    store_snap = io.append(delta["store_rows"], "signatures", tag=args.tag)
-
-    counts = exact.agg(
-        F.count(F.lit(1)).alias("n_new"),
-        F.sum(F.col("dup_of_committed").cast("bigint")).alias(
-            "n_dup_of_committed"
-        ),
-        F.sum(F.col("kept").cast("bigint")).alias("n_kept"),
-    ).first()
-    summary = {
-        "n_new": counts["n_new"],
-        "n_dup_of_committed": int(counts["n_dup_of_committed"] or 0),
-        "n_kept": int(counts["n_kept"] or 0),
-        "n_near_pairs": pairs.count(),  # from cache — no output re-read
-        "n_merges": inc.filter("role = 'merge'").count(),
-        "store_snapshot": store_snap,
-    }
-    exact.unpersist()
-    delta["sketches"].unpersist()  # persisted inside incremental_minhash_pairs
-    pairs.unpersist()
-    inc.unpersist()
+    if summary is None:
+        summary = {"replayed": True, "tag": args.tag}
     json.dump(summary, sys.stdout)
     print()
     if owns_session:

@@ -85,11 +85,11 @@ def pack_sequences(
     Output: (doc_id, shard, bin, n_tokens, cum_tokens) where
     ``cum_tokens`` includes this document.
 
-    ``tokens_col`` (additive, round 5): name a precomputed per-doc
+    ``tokens_col``: name a precomputed per-doc
     token-count column to pack by REAL tokenizer counts instead of the
     whitespace approximation — the handoff from ``bpe.bpe_encode``,
-    whose ``n_tokens`` are the trained tokenizer's piece counts.  The
-    default path (count ``text_col`` by whitespace) is unchanged.
+    whose ``n_tokens`` are the trained tokenizer's piece counts.  By
+    default ``text_col`` is counted by whitespace.
     """
     shard = shard_key(F.col(id_col), n_shards)
     n_tok = (

@@ -118,7 +118,7 @@ def strip_boilerplate(text: str | None) -> str | None:
     return _collapse(" ".join(kept))
 
 
-# Vectorization note (measured, round 2): this operator is regex-bound, not
+# Vectorization note (measured): this operator is regex-bound, not
 # interpreter-bound.  Batch twins over pandas ``Series.str`` (per-element
 # Python loops on object dtype: 0.76x) and Arrow/RE2 compute kernels
 # (~120 MB/s per replace pass here: 0.75-1.0x) were built, held
@@ -126,12 +126,3 @@ def strip_boilerplate(text: str | None) -> str | None:
 # scalar loop at 4000 spans/batch, so the scalar loop (plus the subn and
 # '<a'-prefilter wins above, +8%) stays the executor path.  At sf0.1 the
 # whole strip stage is ~1% of suite wall — not a profile hot spot.
-
-
-def boilerplate_stats(text: str | None) -> dict[str, int]:
-    """Tag/char counts used by the quality queries (cheap, single pass)."""
-    if text is None:
-        return {"n_tags": 0, "n_chars": 0, "n_visible": 0}
-    n_tags = len(_TAG.findall(text))
-    stripped = strip_boilerplate(text) or ""
-    return {"n_tags": n_tags, "n_chars": len(text), "n_visible": len(stripped)}

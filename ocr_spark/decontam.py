@@ -76,16 +76,8 @@ def decontaminate(
     decontamination-typical 8-word grams with ≥2 shared grams; raise them
     further to trade recall for precision on boilerplate-heavy corpora,
     or lower ``n`` for short-document corpora where few docs reach 8
-    tokens at all.
-
-    **Behavior changed (round 4):** the defaults moved from ``n=3`` /
-    ``min_overlap=1`` (the dedup-shingle values this module initially
-    inherited) to ``n=8`` / ``min_overlap=2``.  A caller relying on the
-    old defaults sees FAR fewer contamination flags after upgrading —
-    pass ``n=3, min_overlap=1`` explicitly to reproduce the old cut.
-    (In-repo call sites and oracles moved in lockstep; this note exists
-    because external callers get no error, unlike the loud break chosen
-    for the ``hash_mode`` removal in :mod:`ocr_spark.dedup`.)
+    tokens at all.  ``n=3, min_overlap=1`` (the dedup-shingle values)
+    flag far more documents.
     """
     eg = eval_gram_table(eval_set, n, eval_id_col, text_col)
     dg = explode_non_null(

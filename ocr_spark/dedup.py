@@ -61,11 +61,10 @@ def let_bound(val: Column, body) -> Column:
     times, so one doc paid O(T²) regex splits — measured 9 s for a bare
     5000-doc shingle projection at sf0.1 (≈2 ms/doc) vs 0.03 s
     let-bound, and the ngram-pairs query rode it from ~3 s to ~20 s
-    when the round-5 corpus's docs got longer.  ``transform`` binds its
-    lambda ARGUMENT as a value, so routing ``val`` through a one-element
-    array pins one evaluation regardless of how many times ``body``
-    references it (and ``CollapseProject`` can't undo it, unlike a
-    two-step select)."""
+    on longer docs.  ``transform`` binds its lambda ARGUMENT as a
+    value, so routing ``val`` through a one-element array pins one
+    evaluation regardless of how many times ``body`` references it (and
+    ``CollapseProject`` can't undo it, unlike a two-step select)."""
     return F.transform(F.array(val), body)[0]
 
 
@@ -146,8 +145,8 @@ def minhash_signature(
     portable one: transform lambdas are interpreted per element, so
     per-permutation cost is dominated by expression evaluation, and the
     two multiplies + pmod beat a per-element ``xxhash64(h, j)`` invocation
-    (the round-2 xxhash64 permutations measured SLOWER end-to-end than
-    the affine arithmetic — 14.7 s vs 13.4 s in BENCH_r02)."""
+    (xxhash64 permutations measured SLOWER end-to-end than the affine
+    arithmetic — 14.7 s vs 13.4 s in BENCH_r02)."""
 
     def make_perm(a: int, b: int):
         return lambda h: F.pmod(
@@ -1153,15 +1152,14 @@ def _simhash_block_rows(
     base: DataFrame,
     bits: int,
     max_hamming: int,
-    n_blocks: int | None = None,
-    carry: tuple[str, ...] = (),
+    n_blocks: int | None,
+    carry: tuple[str, ...],
 ) -> DataFrame:
-    """``(id, sig, [carry...,] block_idx, block_val)`` exploded Manku
-    block rows of an ``(id, sig)`` sketch table — single-sourced so the
-    full-corpus and incremental candidate joins use the SAME key
-    derivation (their run-union equivalence depends on it), like
-    :func:`_band_self_pairs` for the minhash family.  ``carry`` names
-    extra columns (e.g. a cohort key) to ride along each block row."""
+    """``(id, sig, [cohort,] block_idx, block_val)`` exploded Manku block
+    rows of a sketch table — one key derivation for the new and the
+    committed side of :func:`incremental_simhash_pairs` (their run-union
+    equivalence depends on it).  ``carry`` is ``("cohort",)`` when the
+    sketches carry one."""
     blocks = simhash_blocks(
         F.col("sig"), bits=bits, max_hamming=max_hamming, n_blocks=n_blocks
     )
@@ -1170,49 +1168,6 @@ def _simhash_block_rows(
     # for the measurement).
     return explode_non_null(base, blocks, "b", "id", "sig", *carry).select(
         "id", "sig", *carry, "b.block_idx", "b.block_val"
-    )
-
-
-def _block_self_pairs(
-    banded: DataFrame, join_keys: list[str] | None = None
-) -> DataFrame:
-    """Canonical candidate ``(id_a, id_b, sig_a, sig_b)`` pairs from a
-    simhash block-table self-join: equi-join on the block key,
-    ``id_a < id_b``, the signatures riding along for the hamming verify.
-    NOT yet distinct — the caller places the distinct.  Single-sourced
-    (like :func:`_band_self_pairs` for the minhash family) so the
-    full-corpus (:func:`simhash_pairs`) and incremental
-    (:func:`incremental_simhash_pairs`) paths cannot drift apart in
-    candidate canonicalization — their run-union equivalence depends on
-    emitting identical pair rows for identical block tables."""
-    keys = (
-        list(join_keys) if join_keys is not None
-        else ["block_idx", "block_val"]
-    )
-    return (
-        banded.alias("l")
-        .join(banded.alias("r"), on=keys)
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.sig").alias("sig_a"),
-            F.col("r.sig").alias("sig_b"),
-        )
-    )
-
-
-def _hamming_verify(cand: DataFrame, max_hamming: int) -> DataFrame:
-    """``bit_count(xor)`` verification of candidate (id, sig) pairs."""
-    return (
-        cand.select(
-            "id_a",
-            "id_b",
-            F.bit_count(
-                F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-            ).cast("bigint").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -1228,7 +1183,7 @@ def incremental_simhash_pairs(
     pairs TOUCHING the new batch — (new × new) ∪ (new × committed) —
     without re-pairing the committed corpus against itself, the simhash
     member of the incremental family (exact / minhash / clusters /
-    passages).
+    passages).  :func:`simhash_pairs` is this over no store.
 
     Same store protocol as :func:`incremental_minhash_pairs`: sketch the
     delta (:func:`simhash_sketches`), block-join it against itself and
@@ -1241,24 +1196,45 @@ def incremental_simhash_pairs(
     run that introduced its later member) — the ``dedup_simhash_
     incremental`` contract oracle replays exactly that restriction.
 
+    A ``cohort`` column on the sketches joins the block key, so
+    cross-cohort pairs are never generated; both sides must carry it or
+    neither.  Struct-wrap it as ``block_col`` of :func:`simhash_pairs`
+    does, or a NULL cohort never pairs.
+
     Preconditions: new ids disjoint from committed ids, and both sides
     sketched with the same ``bits``/``shingle_n``/``max_hamming``/
     ``n_blocks`` block split (NOT detectable from a bigint signature at
     read time — see :func:`simhash_sketches`)."""
+    carry = ("cohort",) if "cohort" in new_sketches.columns else ()
+    if committed_sketches is not None and bool(carry) != (
+        "cohort" in committed_sketches.columns
+    ):
+        raise ValueError(
+            "new and committed simhash sketches must both carry a "
+            "'cohort' column or neither"
+        )
+    keys = [*carry, "block_idx", "block_val"]
     if persist_new:
         new_sketches = new_sketches.persist()
-    nb = _simhash_block_rows(new_sketches, bits, max_hamming, n_blocks)
-    nn = _block_self_pairs(nb)
-    if committed_sketches is None:
-        cand = nn.distinct()
-    else:
+    nb = _simhash_block_rows(new_sketches, bits, max_hamming, n_blocks, carry)
+    # new x new: canonical (id_a < id_b) straight from the self-join
+    cand = (
+        nb.alias("l").join(nb.alias("r"), on=keys)
+        .filter(F.col("l.id") < F.col("r.id"))
+        .select(
+            F.col("l.id").alias("id_a"),
+            F.col("r.id").alias("id_b"),
+            F.col("l.sig").alias("sig_a"),
+            F.col("r.sig").alias("sig_b"),
+        )
+    )
+    if committed_sketches is not None:
         cb = _simhash_block_rows(
-            committed_sketches, bits, max_hamming, n_blocks
+            committed_sketches, bits, max_hamming, n_blocks, carry
         )
         lt = F.col("l.id") < F.col("r.id")
-        nc = (
-            nb.alias("l")
-            .join(cb.alias("r"), on=["block_idx", "block_val"])
+        cand = cand.unionByName(
+            nb.alias("l").join(cb.alias("r"), on=keys)
             .filter(F.col("l.id") != F.col("r.id"))
             .select(
                 F.least(F.col("l.id"), F.col("r.id")).alias("id_a"),
@@ -1269,8 +1245,17 @@ def incremental_simhash_pairs(
                 .alias("sig_b"),
             )
         )
-        cand = nn.unionByName(nc).distinct()
-    return _hamming_verify(cand, max_hamming)
+    return (
+        cand.distinct()
+        .select(
+            "id_a",
+            "id_b",
+            F.bit_count(
+                F.col("sig_a").bitwiseXOR(F.col("sig_b"))
+            ).cast("bigint").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
 
 
 def simhash_pairs(
@@ -1283,7 +1268,8 @@ def simhash_pairs(
     n_blocks: int | None = None,
     block_col: Column | None = None,
 ) -> DataFrame:
-    """SimHash near-dup pairs with FULL recall at ``hamming ≤ max_hamming``.
+    """SimHash near-dup pairs with FULL recall at ``hamming ≤ max_hamming``
+    — :func:`incremental_simhash_pairs` over no committed store.
 
     Standard block-permutation scheme (Manku/Jain/Sarma, "Detecting
     Near-Duplicates for Web Crawling", WWW'07): split the ``bits``-wide
@@ -1310,8 +1296,9 @@ def simhash_pairs(
       (n_blocks=6 → 20 tables × 2^30 keys; candidates/doc measured flat
       at 150k docs).
     - ``block_col`` scopes candidates to a caller cohort (language,
-      domain, shard) — an expression over ``df``'s columns AND-ed into
-      the join key, so cross-cohort pairs are never generated at all.
+      domain, shard) — an expression over ``df``'s columns, attached to
+      the sketches as their ``cohort`` column and AND-ed into the join
+      key, so cross-cohort pairs are never generated at all.
       Costs one id-keyed join to attach the cohort to the signature
       table (reuses the signature groupBy's hash partitioning).
       A NULL cohort is its OWN cohort (groupBy semantics): the value is
@@ -1325,8 +1312,6 @@ def simhash_pairs(
     skew-join splits what remains.
     """
     base = simhash_sketches(df, text_col, id_col, bits, shingle_n)
-    carry: tuple[str, ...] = ()
-    join_keys = ["block_idx", "block_val"]
     if block_col is not None:
         cohorts = df.select(
             F.col(id_col).alias("id"),
@@ -1334,11 +1319,10 @@ def simhash_pairs(
             F.struct(block_col.alias("v")).alias("cohort"),
         )
         base = base.join(cohorts, on="id")
-        carry = ("cohort",)
-        join_keys = ["cohort", "block_idx", "block_val"]
-    banded = _simhash_block_rows(base, bits, max_hamming, n_blocks, carry)
-    cand = _block_self_pairs(banded, join_keys).distinct()
-    return _hamming_verify(cand, max_hamming)
+    return incremental_simhash_pairs(
+        base, None, max_hamming, bits, n_blocks, persist_new=False
+    )
+
 
 
 # ------------------------------------------------------ duplicated passages
@@ -1763,18 +1747,18 @@ def incremental_signature_delta(
     id_col: str = "doc_id",
 ) -> dict[str, DataFrame]:
     """ONE delta batch against the committed signature store — the
-    shared compute core of the batch job
-    (``jobs/run_dedup_incremental.py``) and the streaming wrapper
-    (:func:`ocr_spark.ingest.neardup_ingest_batch`): exact pass, near-dup
-    pass over the exact survivors, incremental cluster maintenance, and
-    the store rows whose append commits the run.  One definition so the
-    two deployment shapes cannot drift semantically.
+    compute core of ``ocr_spark.ingest._signature_commit``, which both
+    the batch job (``jobs/run_dedup_incremental.py``) and the streaming
+    wrapper (:func:`ocr_spark.ingest.neardup_ingest_batch`) commit
+    through: exact pass, near-dup pass over the exact survivors,
+    incremental cluster maintenance, and the store rows whose append
+    commits the run.
 
     ``committed`` is the full signatures table (``role`` doc+merge) or
     None for a virgin store.  Returns persisted DataFrames
     ``{"exact", "sketches", "pairs", "clusters", "store_rows"}`` — the
-    caller owns the writes, the (tagged or untagged) store append, and
-    the final ``unpersist()`` of the first four.
+    caller owns the writes, the store append, and the final
+    ``unpersist()`` of the first four.
 
     Raises ``ValueError`` when the delta's ids overlap committed ids —
     the precondition the whole incremental family rests on (a retried

@@ -429,10 +429,9 @@ def q_id_parsers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused identifier-parser panel — D1 CURP demographics with the
     century pivot (main.py:531-598) and D2 elector-key parsing
     (main.py:604-655), both substring + map-literal lookups over the SAME
-    synthesized cards, in one scan.  Separate ``curp_parse`` /
-    ``elector_key_parse`` entries through round 4; fused for the 50-query
-    window — each parser keeps its own oracle-verified columns (oracle =
-    the two original oracles joined on doc_id)."""
+    synthesized cards, in one scan, fused to fit the 50-query window —
+    each parser keeps its own oracle-verified columns (oracle = the two
+    parsers' oracles joined on doc_id)."""
     df = _cards_df(spark, sf_dir)
     c, k = F.col("curp"), F.col("ekey")
     return df.select(
@@ -638,12 +637,11 @@ def q_text_cleaners(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.py:1376-1383), P3 name-token blacklist with the original-casing
     quirk (main.py:661-722), P4 CP-token removal (main.py:1530-1545) and
     the vigencia year-pair formatter (main.py:918/930/945/1089) computed
-    in ONE scan of the documents table.  The four cleaners were separate
-    registry entries through round 4; they are one query now so every
-    entry fits the driver's 50-query correctness window — each operator
-    keeps its own oracle-verified columns (the oracle is the four
-    original oracle blocks joined on doc_id), and the fused shape is
-    also the production one: per-doc scalar cleaners belong in a single
+    in ONE scan of the documents table, so every entry fits the
+    driver's 50-query correctness window — each operator keeps its own
+    oracle-verified columns (the oracle is the four cleaners' oracle
+    blocks joined on doc_id), and the fused shape is also the
+    production one: per-doc scalar cleaners belong in a single
     projection, not four scans."""
     df = _docs_df(spark, sf_dir).select(
         "doc_id",
@@ -1331,8 +1329,8 @@ WHERE ('0x' || substr(md5('sample/' || cast(doc_id AS varchar)), 1, 15))
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy next-fit sequence packing into 512-token bins across 8
     hash shards (per-shard window cumsum — the parallelism unit), plus
-    the shard-level EXPORT MANIFEST columns (round 5:
-    :func:`ocr_spark.assembly.shard_manifest` — docs, tokens, and the
+    the shard-level EXPORT MANIFEST columns
+    (:func:`ocr_spark.assembly.shard_manifest` — docs, tokens, and the
     order-independent content XOR per shard) joined back per doc, so
     the training-shard exporter's accounting arithmetic sits under the
     same hash gate."""
@@ -1486,9 +1484,8 @@ FROM marked d LEFT JOIN sc USING (doc_id)
 
 def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 characteristic terms per doc by tf·idf with bit-quantized
-    idf — exact bigint scores, ties broken (score DESC, token ASC).
-    Round 5 extended the row with ``bm25_ppm`` (``with_bm25=True``): the
-    Okapi BM25 weight of the SAME selected rows — floored to exact ppm
+    idf — exact bigint scores, ties broken (score DESC, token ASC),
+    plus ``bm25_ppm`` (``with_bm25=True``): the Okapi BM25 weight of the SAME selected rows — floored to exact ppm
     per term (see textstats.bm25_term_ppm) so the dl/avgdl length
     normalization sits under the hash gate too."""
     return ts.tfidf_topk(_marked_docs(spark, sf_dir), k=3, with_bm25=True)
@@ -1690,8 +1687,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     between docs, and trigram width is what makes sub-sentence overlap
     visible on ~50-token documents.
 
-    Round 5 added the Bloom-filter scale path's approx columns to the
-    same row (``n_bloom_grams``/``contaminated_bloom`` from
+    The Bloom-filter scale path's approx columns ride in the same row (``n_bloom_grams``/``contaminated_bloom`` from
     :func:`ocr_spark.decontam.decontaminate_bloom` in ``mode='approx'``)
     so the bitmap build+probe arithmetic (:mod:`ocr_spark.membership`,
     63-bit portable words, double-hashed positions) is itself under the
@@ -2116,13 +2112,6 @@ WHERE t.corpus_key = k.ck
 """
 
 
-# q_embed_doc_neardup was retired in round 5 for q_semantic_dedup: its
-# LSH-pair shape is the same one ann_lsh_pairs / text_ann_pairs keep
-# under the gate, and its doc↔embedding equijoin + label annotation are
-# plain broadcast-join shapes covered by orders_by_segment /
-# curp_state_join — whereas SemDeDup (cluster-then-pair over a trained
-# quantizer) had no driver-verified row at all.
-
 # Contract-scale SemDeDup configuration, shared by the Spark query and
 # its oracle so the two can never drift: 8 seeded cells keep the sf0.01
 # near-corpus's ~2,000 docs at ~250 docs/cell (the within-cell join is
@@ -2477,16 +2466,15 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting, winnowing/prefix/whole-doc fingerprints, PII scrub +
     counts, and the 16-bit SimHash signature — ONE scan of the documents
     table producing every per-doc scalar column a curation job annotates
-    with before any corpus-level pass.  These were five registry entries
-    through round 4 (``langid``, ``quality_score``, ``fingerprint``,
-    ``scrub_pii``, ``dedup_simhash``); fusing them keeps the registry
-    inside the driver's 50-query window AND is the production shape —
-    per-doc scalar columns belong in one projection over one scan, not
-    five scans of the same table.  Each operator keeps its own
-    oracle-verified columns: the oracle joins the five original oracle
-    blocks on doc_id.
+    with before any corpus-level pass (``langid``, ``quality_score``,
+    ``fingerprint``, ``scrub_pii``, ``dedup_simhash``).  Fusing them
+    keeps the registry inside the driver's 50-query window AND is the
+    production shape — per-doc scalar columns belong in one projection
+    over one scan, not five scans of the same table.  Each operator
+    keeps its own oracle-verified columns: the oracle joins the five
+    operators' oracle blocks on doc_id.
 
-    Round 5 adds ``clf_prob_ppm`` — the TRAINED quality classifier
+    ``clf_prob_ppm`` is the TRAINED quality classifier
     (ocr_spark/classifier.py): a linear probe over hashed token counts,
     trained LIVE here by exact-integer GD on label ``lang == 'en'``
     (the reference-corpus-membership shape) and scored over every doc.
@@ -2671,12 +2659,9 @@ GROUP BY c_mktsegment
 """
 
 
-# Batch sessionization / hourly-window twins retired from the registry in
-# round 5: their STREAMING counterparts (q_events_sessions_stream /
-# q_events_hourly_stream) drain through foreachBatch and are gated against
-# these IDENTICAL oracles, so the batch entries double-covered the same
-# semantics while crowding the driver's 50-query window.  The SQL stays —
-# it is the streams' oracle.
+# Batch sessionization / hourly-window SQL: the oracles of the STREAMING
+# rows (q_events_sessions_stream / q_events_hourly_stream), which drain
+# through foreachBatch and are gated against these batch results.
 SQL_EVENTS_SESSIONS = """
 WITH g AS (
   SELECT user_id,
@@ -2775,16 +2760,6 @@ def q_events_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_events").alias("n_events"),
     )
 
-
-# q_events_props_json / q_supplier_by_region / q_part_filter_agg /
-# q_top_orders_per_customer were retired in round 5: their operator shapes
-# (native JSON path extraction, broadcast snowflake walk, pushed
-# filter + agg, per-group top-k) are each still covered by a surviving
-# entry (events_dedup_stream parses the SAME props JSON natively;
-# orders_by_segment / curp_state_join are the broadcast joins;
-# lineitem_pricing the pushed-filter agg; tfidf_topk the window top-k) —
-# they crowded the flagship family out of the driver's 50-query window
-# in CORRECTNESS_r04, which is a worse trade than losing four demo rows.
 
 def q_curp_state_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 state lookup as a BROADCAST JOIN against a dimension DataFrame

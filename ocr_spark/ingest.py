@@ -80,7 +80,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.dedup import (
-    exact_digest, exact_duplicates_incremental, raise_on_id_overlap,
+    exact_digest, exact_duplicates_incremental,
+    incremental_signature_delta, raise_on_id_overlap,
 )
 from ocr_spark.tableio import DuplicateTagError, ParquetManifestIO
 from ocr_spark.textstats import portable_hash
@@ -459,9 +460,9 @@ def neardup_ingest_batch(
     """One micro-batch through the FULL incremental dedup family (exact
     + MinHash near-dup + cluster maintenance) against the committed
     signature store — the streaming twin of
-    ``jobs/run_dedup_incremental.py``, sharing its compute core
-    (:func:`ocr_spark.dedup.incremental_signature_delta`) so batch and
-    streaming deployments cannot drift.
+    ``jobs/run_dedup_incremental.py``, committing through the same
+    :func:`_signature_commit` so batch and streaming deployments cannot
+    drift.
 
     Outputs per batch (both ``batch_id``-partitioned dynamic overwrite,
     so replays rewrite rather than duplicate):
@@ -477,19 +478,10 @@ def neardup_ingest_batch(
     unchanged, so a replay recomputes the identical delta and the
     overwrites are idempotent; after it, the tag short-circuits.
     """
-    from ocr_spark.dedup import incremental_signature_delta
-
     tag = _batch_tag(stream_id, batch_id)
     t0 = time.monotonic()
-    if tag in io.tags(SIGNATURES_TABLE):
-        return _replayed(batch_id, tag)
 
-    committed = (
-        io.read(spark, SIGNATURES_TABLE)
-        if io.exists(SIGNATURES_TABLE) else None
-    )
-    delta = incremental_signature_delta(docs, committed, threshold)
-    try:
+    def write_outputs(delta: dict[str, DataFrame]) -> None:
         labeled = docs.filter(F.col("text").isNull()).withColumn(
             "cluster_id", F.lit(None).cast("bigint")
         ).unionByName(
@@ -503,30 +495,79 @@ def neardup_ingest_batch(
         _write_batch_partition(labeled, batch_id, f"{out_dir}/docs")
         _write_batch_partition(delta["pairs"], batch_id, f"{out_dir}/pairs")
 
-        try:
-            snap = io.append(
-                delta["store_rows"], SIGNATURES_TABLE, tag=tag
-            )
-        except DuplicateTagError:
-            return _replayed(batch_id, tag)
+    done = _signature_commit(spark, docs, io, tag, threshold, write_outputs)
+    if done is None:
+        return _replayed(batch_id, tag)
+    return {
+        "batch_id": batch_id,
+        "tag": tag,
+        "replayed": False,
+        "snapshot": done["store_snapshot"],
+        "docs_in": done["n_new"],
+        "docs_kept": done["n_kept"],
+        "dup_of_committed": done["n_dup_of_committed"],
+        "near_pairs": done["n_near_pairs"],
+        "merges": done["n_merges"],
+        "wall_s": round(time.monotonic() - t0, 3),
+    }
 
+
+def _signature_commit(
+    spark: SparkSession,
+    docs: DataFrame,
+    io: ParquetManifestIO,
+    tag: str | None,
+    threshold: float,
+    write_outputs,
+) -> dict | None:
+    """Commit one ``(doc_id, text)`` delta to the signature store — the
+    one body of :func:`neardup_ingest_batch` and
+    ``jobs/run_dedup_incremental.py``.  ``write_outputs(delta)`` writes
+    the caller's own outputs from the persisted
+    :func:`ocr_spark.dedup.incremental_signature_delta` frames before
+    the store append, the commit point.
+
+    Returns None when ``tag`` already committed — found up front, or
+    raised by the append's lock-held check when a racing run committed
+    it first — else the counts and the store snapshot.  Raises
+    ``ValueError`` on a store in the removed two-table layout (treating
+    it as empty would re-keep every committed duplicate and start a
+    fresh history beside the stale one) and on delta ids that overlap
+    the store's.
+    """
+    if tag is not None and tag in io.tags(SIGNATURES_TABLE):
+        return None
+    has_store = io.exists(SIGNATURES_TABLE)
+    legacy = [] if has_store else [
+        t for t in ("digests", "sketches") if io.exists(t)
+    ]
+    if legacy:
+        raise ValueError(
+            f"store {io.root!r} uses the removed two-table layout "
+            f"({', '.join(legacy)}); migrate it into one 'signatures' "
+            "table (id, digest, sh, sig, cluster_id, role='doc') "
+            "before running"
+        )
+    committed = io.read(spark, SIGNATURES_TABLE) if has_store else None
+    delta = incremental_signature_delta(docs, committed, threshold)
+    try:
+        write_outputs(delta)
+        try:
+            snap = io.append(delta["store_rows"], SIGNATURES_TABLE, tag=tag)
+        except DuplicateTagError:
+            # a racing run committed the tag between our tags() check
+            # and the append; its outputs carried the same content
+            return None
         counts = delta["exact"].agg(
             F.count(F.lit(1)).alias("n_new"),
-            F.sum(F.col("dup_of_committed").cast("bigint"))
-            .alias("n_dup_of_committed"),
-            F.sum(F.col("kept").cast("bigint")).alias("n_kept"),
+            F.count_if("dup_of_committed").alias("n_dup_of_committed"),
+            F.count_if("kept").alias("n_kept"),
         ).first()
         return {
-            "batch_id": batch_id,
-            "tag": tag,
-            "replayed": False,
-            "snapshot": snap,
-            "docs_in": counts["n_new"],
-            "docs_kept": int(counts["n_kept"] or 0),
-            "dup_of_committed": int(counts["n_dup_of_committed"] or 0),
-            "near_pairs": delta["pairs"].count(),
-            "merges": delta["clusters"].filter("role = 'merge'").count(),
-            "wall_s": round(time.monotonic() - t0, 3),
+            **counts.asDict(),
+            "n_near_pairs": delta["pairs"].count(),  # from cache
+            "n_merges": delta["clusters"].filter("role = 'merge'").count(),
+            "store_snapshot": snap,
         }
     finally:
         for k in ("exact", "sketches", "pairs", "clusters"):

@@ -956,6 +956,13 @@ def lsh_ann_pairs(
     one-shot calls should clear the cache.  Each table is one narrow
     ``(tbl, bucket)`` projection of that base, unioned under one join,
     so the payload rides the join and no vector joins back.
+
+    This is not :func:`incremental_lsh_ann_pairs` over no store, because
+    the two verify forms differ only at ``dims`` ≤ :data:`UNROLL_MAX_DIMS`
+    (wider vectors fold through the HOF in both), where the flat columns
+    here measured 5× on the verify (:func:`_flat_cols`) and the same
+    flat columns under a union with a committed store exhausted the
+    driver heap — so the form follows whether a committed store is there.
     """
     if planes is not None and n_tables > 1:
         raise ValueError(

@@ -158,7 +158,7 @@ class ParquetManifestIO:
             )
 
     def _resolve(self, table: str, d: str) -> str:
-        """Manifest data paths are RELATIVE to the table dir (round 5):
+        """Manifest data paths are RELATIVE to the table dir:
         a store copied or moved wholesale keeps working — with absolute
         paths a forked store silently read (and vacuumed!) the
         original's data directories.  Absolute entries from older
@@ -397,7 +397,7 @@ class ParquetManifestIO:
         a tombstone is safe — ``vacuum_orphans`` deliberately never
         touches them, because an age heuristic cannot distinguish a
         dead writer from one stalled through two sweep windows (see the
-        round-5 note there)."""
+        note there)."""
         import shutil
 
         with self._writer_lock(table):
@@ -497,7 +497,7 @@ class ParquetManifestIO:
                     if os.path.isdir(d := os.path.join(data_root, name))
                     and os.path.realpath(d) not in protected
                 ]
-                # Tombstones are NEVER auto-reclaimed here (round 5):
+                # Tombstones are NEVER auto-reclaimed here:
                 # "aged + dir gone" does not prove the tombstoned
                 # writer is dead — a write stalled through TWO
                 # consecutive >min_age_s windows could see its
@@ -632,11 +632,3 @@ class IcebergIO:  # pragma: no cover - needs an Iceberg catalog
                 f"{self.catalog}.{table}"
             )
         return spark.read.table(f"{self.catalog}.{table}")
-
-
-def get_table_io(backend: str = "parquet", **kwargs):
-    if backend == "parquet":
-        return ParquetManifestIO(**kwargs)
-    if backend == "iceberg":
-        return IcebergIO(**kwargs)
-    raise ValueError(f"unknown table io backend: {backend}")

@@ -225,12 +225,6 @@ def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id",
     the floor.  All fractions floor-truncated to 4 digits (cross-engine,
     see trunc4).
 
-    **Behavior changed (round 4):** the ``min_tokens=50`` floor is new —
-    earlier rounds gated ``repetitive`` on the fractions alone, so short
-    documents previously flagged now come back ``repetitive = false``
-    by default (the fraction columns themselves are unchanged).  Pass
-    ``min_tokens=0`` to reproduce the old behavior.
-
     Shape for scale: the n-gram fractions are pure array expressions (no
     shuffle); the token-frequency max uses the standard explode →
     groupBy(doc, token) → groupBy(doc) two-level aggregation —

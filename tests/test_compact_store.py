@@ -12,8 +12,8 @@ import shutil
 from pyspark.sql import functions as F
 
 from jobs.compact_store import main as compact_main
-from jobs.run_dedup_incremental import _current_labels
 from jobs.run_dedup_incremental import main as job_main
+from ocr_spark.dedup import current_store_labels
 from ocr_spark.tableio import ParquetManifestIO
 
 
@@ -234,12 +234,12 @@ def test_signatures_store_compaction_identical_next_run(spark, tmp_path):
 
     want_labels = {
         (r.id, r.cluster_id)
-        for r in _current_labels(
+        for r in current_store_labels(
             ParquetManifestIO(store2).read(spark, "signatures")
         ).collect()
     }
     got_labels = {(r.id, r.cluster_id)
-                  for r in _current_labels(compacted).collect()}
+                  for r in current_store_labels(compacted).collect()}
     assert got_labels == want_labels == {(1, 1), (2, 1), (3, 1)}
 
     # run C against both timelines: identical decisions, pairs, labels

@@ -1321,6 +1321,43 @@ def test_incremental_simhash_two_batches_equal_one_run(spark, tmp_path):
     # the planted exact dup pairs across batches at hamming 0
     assert (0, 9902, 0) in run2
 
+    # block_col: two runs over sketches carrying the cohort equal the
+    # one-shot cohort-scoped pair set.  Two more copies of template 0
+    # get odd ids, so a NULL cohort: they pair with each other but with
+    # neither even-id copy.
+    cohort = F.when(F.col("doc_id") % 2 == 0, F.lit("even"))
+    full = full.unionByName(_df(
+        spark, [(9903, variant(0, 0)), (9905, variant(0, 0))],
+        "doc_id bigint, text string",
+    ))
+    b = full.filter(F.col("doc_id") % 100 >= 2)
+
+    def cohort_sketches(df):
+        return simhash_sketches(df).join(
+            df.select(F.col("doc_id").alias("id"),
+                      F.struct(cohort.alias("v")).alias("cohort")),
+            on="id",
+        )
+
+    sk_a = cohort_sketches(a)
+    run1 = {(r.id_a, r.id_b, r.hamming)
+            for r in incremental_simhash_pairs(sk_a, None).collect()}
+    io.append(sk_a, "simhash_cohort")
+    run2 = {(r.id_a, r.id_b, r.hamming)
+            for r in incremental_simhash_pairs(
+                cohort_sketches(b),
+                io.read(spark, "simhash_cohort")).collect()}
+    scoped = {(r.id_a, r.id_b, r.hamming)
+              for r in simhash_pairs(full, block_col=cohort).collect()}
+    assert scoped == {(0, 9902, 0), (9903, 9905, 0)}
+    assert run1 | run2 == scoped
+    # a cohort store probed by cohort-less sketches would pair across
+    # cohorts silently; it refuses at plan build instead
+    with pytest.raises(ValueError, match="cohort"):
+        incremental_simhash_pairs(
+            simhash_sketches(b), io.read(spark, "simhash_cohort")
+        )
+
 
 def test_incremental_line_dedup_equals_one_shot_restriction(spark, tmp_path):
     """Line-level member of the incremental family: the delta filtered

@@ -95,13 +95,13 @@ def test_two_runs_equal_one_run(spark, tmp_path):
 
     # cluster store: current labels (stored 'doc' labels + accumulated
     # merges) == one-shot components over the exact survivors' pairs
-    from jobs.run_dedup_incremental import _current_labels
-    from ocr_spark.dedup import connected_components
+    from ocr_spark.dedup import connected_components, current_store_labels
     from ocr_spark.tableio import ParquetManifestIO
 
     committed = ParquetManifestIO(store).read(spark, "signatures")
     got_labels = {
-        (r.id, r.cluster_id) for r in _current_labels(committed).collect()
+        (r.id, r.cluster_id)
+        for r in current_store_labels(committed).collect()
     }
     want_labels = {
         (r.id, r.cluster_id)
@@ -125,7 +125,7 @@ def test_job_merges_committed_clusters_via_bridge_doc(spark, tmp_path):
     (28-token halves of each side, J≈0.39 per pair) is verified to band
     with BOTH sides under the frozen minhash constants (deterministic,
     not flaky — the constants are oracle-pinned)."""
-    from jobs.run_dedup_incremental import _current_labels
+    from ocr_spark.dedup import current_store_labels
     from ocr_spark.tableio import ParquetManifestIO
 
     a = " ".join(f"x{i}" for i in range(40))
@@ -151,7 +151,7 @@ def test_job_merges_committed_clusters_via_bridge_doc(spark, tmp_path):
 
     committed = ParquetManifestIO(store).read(spark, "signatures")
     labels = {(r.id, r.cluster_id)
-              for r in _current_labels(committed).collect()}
+              for r in current_store_labels(committed).collect()}
     assert labels == {(1, 1), (2, 1), (3, 1)}
     # the merge record itself is in the store, role-tagged
     merges = {(r.id, r.cluster_id)
@@ -269,3 +269,36 @@ def test_job_tag_makes_resubmission_exactly_once(spark, tmp_path):
     assert set(io.tags("signatures")) == {
         "orchestrator/run-001", "orchestrator/run-002",
     }
+
+
+def test_job_tag_racing_commit_reads_as_replayed(
+    spark, tmp_path, monkeypatch
+):
+    """A run whose tag a racing run commits between this run's tag
+    pre-check and its append reads as replayed, as the --tag help
+    promises: the append's lock-held DuplicateTagError is the answer,
+    not a crash, and the store keeps the racer's snapshots."""
+    from ocr_spark.tableio import ParquetManifestIO
+
+    store = str(tmp_path / "store")
+    tag = "orchestrator/run-001"
+    job_main(["--synthetic", "30", "--start", "0", "--store", store,
+              "--out", str(tmp_path / "racer"), "--tag", tag])
+    io = ParquetManifestIO(store)
+    snaps = io.snapshots("signatures")
+
+    # the pre-check sees the store as it was before the racer committed
+    real_tags = ParquetManifestIO.tags
+    calls = []
+
+    def tags_before_race(self, table):
+        calls.append(table)
+        return {} if len(calls) == 1 else real_tags(self, table)
+
+    monkeypatch.setattr(ParquetManifestIO, "tags", tags_before_race)
+    r = job_main(["--synthetic", "30", "--start", "30", "--store", store,
+                  "--out", str(tmp_path / "late"), "--tag", tag])
+    monkeypatch.undo()
+    assert calls, "the tag pre-check never ran"
+    assert r == {"replayed": True, "tag": tag}
+    assert io.snapshots("signatures") == snaps

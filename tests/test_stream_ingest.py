@@ -398,7 +398,7 @@ def test_job_cli_two_synthetic_drops(tmp_path):
 
 
 def _label_sets(spark, store_root):
-    from jobs.run_dedup_incremental import _current_labels
+    from ocr_spark.dedup import current_store_labels
 
     io = ParquetManifestIO(store_root)
     committed = io.read(spark, "signatures")
@@ -409,7 +409,7 @@ def _label_sets(spark, store_root):
     )
     labels = set(
         (r.id, r.cluster_id)
-        for r in _current_labels(committed).collect()
+        for r in current_store_labels(committed).collect()
     )
     return docs, labels
 
@@ -504,6 +504,28 @@ def test_neardup_replay_and_crash_converge(spark, tmp_path, monkeypatch):
     docs_out = spark.read.parquet(f"{out}/docs").select("doc_id")
     assert docs_out.count() == docs_out.distinct().count() \
         == first["docs_kept"] + retry["docs_kept"]
+
+
+def test_neardup_refuses_legacy_two_table_store(spark, tmp_path):
+    """The stream refuses a store in the removed digests/sketches layout
+    as the batch job does, before it writes anything: treated as empty,
+    it would commit a fresh 'signatures' table beside the legacy one and
+    re-keep every committed duplicate."""
+    import os
+
+    from ocr_spark.ingest import neardup_ingest_batch
+
+    store = tmp_path / "store"
+    (store / "digests").mkdir(parents=True)
+    (store / "digests" / "manifest.json").write_text('{"snapshots": []}')
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="two-table layout"):
+        neardup_ingest_batch(
+            spark, synthetic_documents(spark, 5, start=0), 0,
+            ParquetManifestIO(str(store)), out,
+        )
+    assert not (store / "signatures").exists()
+    assert not os.path.exists(out)
 
 
 def test_job_cli_near_dup_mode(tmp_path):

@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from ocr_spark.tableio import ParquetManifestIO, get_table_io
+from ocr_spark.tableio import ParquetManifestIO
 
 
 def _df(spark, values):
@@ -456,13 +456,6 @@ def test_vacuum_orphans_reclaims_crash_leaked_tmp_manifests(
     assert not leaked.exists()
     # the real manifest is untouched and the table still reads
     assert [r.v for r in io.read(spark, "t").collect()] == [1]
-
-
-def test_backend_selector():
-    assert isinstance(get_table_io("parquet", root="/tmp/x"),
-                      ParquetManifestIO)
-    with pytest.raises(ValueError):
-        get_table_io("csvpile")
 
 
 def test_json_ingest_quarantines_corrupt_records(spark, tmp_path):
