@@ -305,33 +305,52 @@ def exact_duplicates_incremental(
     committed-side grouping (the store contributes a digest probe only —
     see the shape note below).
 
+    A NULL ``digest`` marks a content-less row (quarantined, empty):
+    it has nothing to deduplicate on, so it forms its own group and is
+    kept — ``dup_of_committed`` false, ``new_canonical_id`` its own id.
+    A caller can therefore pass every batch row through in one pass
+    rather than union the content-less ones back.
+
     Shape for 100 TB: one window ``min(id)`` over the DELTA only,
-    partitioned by digest (one shuffle and no grouped side to join
-    back; a hot digest's group is buffered in one task, spilling past
-    memory), plus one IN-subquery probe of delta digests against the store,
-    digest-keyed; the committed side contributes a scan and the probe's
-    build, never a committed × committed grouping.  (The probe plans as
-    an existence join: it flags each delta row once whatever the store
-    holds, so a store that is not digest-unique — a caller committed a
-    raw batch — cannot multiply rows, and needs no defensive
-    ``distinct``.)
+    partitioned by ``(digest, id if digest is NULL)`` — one shuffle, no
+    grouped side to join back, and content-less rows spread by id
+    instead of piling into one hot NULL group (a hot digest's group is
+    buffered in one task, spilling past memory) — plus one
+    ``digest IN (store)`` probe, digest-keyed; the committed side
+    contributes a scan and the probe's build, never a committed ×
+    committed grouping.  The probe is computed once as
+    ``dup_of_committed`` and only ever read un-negated (``CASE WHEN
+    dup THEN …``): a ``NOT IN`` plans as a null-aware
+    BroadcastNestedLoopJoin (batch × store), a positive IN as one hash
+    existence join.  (An existence join flags each delta row once
+    whatever the store holds, so a store that is not digest-unique — a
+    caller committed a raw batch — cannot multiply rows, and needs no
+    defensive ``distinct``.)
     Precondition: new ids are disjoint from committed ids (the store
     append is the commit point), mirroring
     :func:`incremental_minhash_pairs`."""
     from pyspark.sql import Window
 
+    own_group = F.when(F.col("digest").isNull(), F.col("id"))
     flagged = new_digests.withColumn(
-        "new_canonical_id", F.min("id").over(Window.partitionBy("digest"))
+        "new_canonical_id",
+        F.min("id").over(Window.partitionBy("digest", own_group)),
     )
     dup = F.lit(False)
     if committed_digests is not None:
         dup = F.col("digest").isin(committed_digests.select("digest"))
+    # a column of its own: each inline copy of the IN would plan its own
+    # existence join, and one under NOT a nested-loop one
+    flagged = flagged.withColumn("dup_of_committed", dup)
+    dup = F.col("dup_of_committed")
     return flagged.select(
         "id",
         "digest",
-        dup.alias("dup_of_committed"),
-        F.when(~dup, F.col("new_canonical_id")).alias("new_canonical_id"),
-        (~dup & (F.col("id") == F.col("new_canonical_id"))).alias("kept"),
+        "dup_of_committed",
+        F.when(dup, None).otherwise(F.col("new_canonical_id"))
+        .alias("new_canonical_id"),
+        F.when(dup, False).otherwise(F.col("id") == F.col("new_canonical_id"))
+        .alias("kept"),
         *[c for c in new_digests.columns if c not in ("id", "digest")],
     )
 

@@ -57,15 +57,22 @@ guard's, which reads the full store.  A refused batch therefore leaves
 the store and the registry as it found them — a batch that would have
 enabled the registry on a store without one creates none.
 
-Scale shape: per batch, ONE action materializes the persisted verdict
-and aggregates its counts.  It runs a window min(id) over the BATCH's
-digests (one shuffle), an IN-subquery probe of batch digests against
-the store probe (Bloom-pruned to the might-contain survivors when the
-registry is on — at a 10^12-doc store the registry bitmap is what keeps
-the probe's build side from being the whole store), and the fresh-ids
-check, an IN-subquery of batch ids against the full store.  With the
-registry on, the survivor count runs first, over the cached digested
-batch that the verdict then reads.  The docs write (round-robin
+Scale shape: per batch, ONE action reads the batch once, in one arm,
+and materializes the persisted verdict — the batch's only cache, so
+:func:`extract_ingest_batch` lands its extraction there and persists
+nothing itself — and aggregates its counts.  It runs a window min(id)
+over the BATCH's digests keyed ``(digest, id if digest is NULL)`` (one
+shuffle; each content-less row is its own group, so they never pile
+into one hot NULL group), a ``digest IN (store probe)`` that stays
+un-negated through the optimizer and so plans as a hash existence join
+(a ``NOT IN`` would be a batch × store BroadcastNestedLoopJoin; the
+probe is Bloom-pruned to the might-contain survivors when the registry
+is on — at a 10^12-doc store the registry bitmap is what keeps the
+probe's build side from being the whole store), and the fresh-ids
+check, an ``id IN`` hash existence join against the full store; the
+plan shape is pinned in ``tests/test_plan_shapes.py``.  With the
+registry on, the survivor count runs first, over the cached batch
+that the verdict then reads.  The docs write (round-robin
 rebalanced, so AQE sizes its files) and the narrow store append read
 that one cache back; nothing is counted after the append.  The
 committed corpus is never re-grouped.  Store growth is one snapshot per
@@ -175,11 +182,12 @@ def _dedup_commit(
     deduplicated on the digest of ``content``, a Column over ``docs``,
     against the committed ``store_table``; the kept rows land in
     ``out_dir``'s batch partition and their digests commit under
-    ``tag``.  Rows whose ``content`` is NULL have no digest (they must
-    not collapse into one bogus NULL-digest group) — they ride through
-    unscreened rather than vanish: content-less rows can't be
-    duplicates, and dropping data silently is never this pipeline's
-    job.
+    ``tag``.  Rows whose ``content`` is NULL get a NULL digest, which
+    :func:`ocr_spark.dedup.exact_duplicates_incremental` keeps as a
+    group of its own (never one bogus NULL-digest group) — they ride
+    through unscreened in the same pass rather than vanish: content-less
+    rows can't be duplicates, and dropping data silently is never this
+    pipeline's job.
 
     Returns None when the batch already committed (its tag is in the
     store), else ``(snapshot, rows in, digested rows, kept rows,
@@ -205,19 +213,16 @@ def _dedup_commit(
 
     # the persisted verdict is the commit's one batch-sized cache (a
     # registry prune adds the digested batch and its survivors): ONE
-    # action (the aggregate below) materializes it, and the registry
-    # append, the docs write and the store append read it back.  The
-    # try opens HERE: the fresh-ids fail-fast and the registry reads
-    # are designed failure paths, and a driver that catches per-batch
-    # errors and continues must not accrete one leaked cache per failed
-    # batch.
-    rows = docs.select(
+    # action (the aggregate below) reads ``docs`` once, in one arm, and
+    # materializes it; the registry append, the docs write and the store
+    # append read it back.  The try opens HERE: the fresh-ids fail-fast
+    # and the registry reads are designed failure paths, and a driver
+    # that catches per-batch errors and continues must not accrete one
+    # leaked cache per failed batch.
+    new_digests = docs.select(
         F.col("doc_id").alias("id"),
-        content.alias("_content"),
+        F.when(content.isNotNull(), exact_digest(content)).alias("digest"),
         F.struct(*docs.columns).alias("_doc"),
-    )
-    new_digests = rows.filter(F.col("_content").isNotNull()).select(
-        "id", exact_digest(F.col("_content")).alias("digest"), "_doc"
     )
     caches: list[DataFrame] = []
     n_pruned = None
@@ -232,11 +237,12 @@ def _dedup_commit(
         backfill = prune and not io.exists(registry)
         if prune and not backfill:
             # the survivor count is an action of its own: the cached
-            # digested batch serves it and the verdict
+            # batch serves it and the verdict
             new_digests = new_digests.persist()
             caches.append(new_digests)
             survivors = _registry_survivors(
-                spark, io, new_digests, store_table, registry_m_bits
+                spark, io, new_digests.filter(F.col("digest").isNotNull()),
+                store_table, registry_m_bits,
             ).persist()     # consumed by the count and the semi-join
             caches.append(survivors)
             n_pruned = survivors.count()
@@ -249,13 +255,6 @@ def _dedup_commit(
         # content-less rows ride through unscreened: kept, no digest
         verdict = exact_duplicates_incremental(new_digests, probe).select(
             "id", "digest", "kept", "_doc"
-        ).unionByName(
-            rows.filter(F.col("_content").isNull()).select(
-                "id",
-                F.lit(None).cast("string").alias("digest"),
-                F.lit(True).alias("kept"),
-                "_doc",
-            )
         )
         stale = F.lit(False)
         if committed is not None and enforce_disjoint_ids:
@@ -699,29 +698,27 @@ def extract_ingest_batch(
 
     t0 = time.monotonic()
     tag = _batch_tag(stream_id, batch_id)
-    # lazy: a replayed batch returns before any extraction job runs
-    docs = run_extraction(spark, spans_df, media_df, cfg).persist()
-    try:
-        done = _dedup_commit(
-            spark, docs, serialized_spans(F.col("spans_out")), batch_id,
-            io, out_dir, tag, store_table, None, enforce_disjoint_ids,
-        )
-        if done is None:
-            return _replayed(batch_id, tag)
-        snap, n_in, n_digestable, n_kept, _ = done
-        return {
-            "batch_id": batch_id,
-            "tag": tag,
-            "replayed": False,
-            "snapshot": snap,
-            "docs_in": n_in,
-            "docs_empty": n_in - n_digestable,
-            "docs_kept": n_kept,
-            "docs_dropped": n_digestable - n_kept,
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
-    finally:
-        docs.unpersist()
+    # lazy: a replayed batch returns before any extraction job runs, and
+    # the commit's verdict is the one cache the extraction lands in
+    docs = run_extraction(spark, spans_df, media_df, cfg)
+    done = _dedup_commit(
+        spark, docs, serialized_spans(F.col("spans_out")), batch_id,
+        io, out_dir, tag, store_table, None, enforce_disjoint_ids,
+    )
+    if done is None:
+        return _replayed(batch_id, tag)
+    snap, n_in, n_digestable, n_kept, _ = done
+    return {
+        "batch_id": batch_id,
+        "tag": tag,
+        "replayed": False,
+        "snapshot": snap,
+        "docs_in": n_in,
+        "docs_empty": n_in - n_digestable,
+        "docs_kept": n_kept,
+        "docs_dropped": n_digestable - n_kept,
+        "wall_s": round(time.monotonic() - t0, 3),
+    }
 
 
 def run_stream_extract_ingest(

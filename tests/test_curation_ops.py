@@ -1983,6 +1983,42 @@ def test_exact_incremental_first_run_wins_and_union_equivalence(spark):
     assert kept1 | kept2 == {1, 2, 11}
 
 
+def test_exact_incremental_null_digest_is_its_own_kept_group(spark):
+    """A NULL digest (a content-less row) is never grouped with another
+    NULL digest nor dropped: against a committed store, each such row
+    is kept with ``new_canonical_id`` equal to its own id, while digested
+    rows still dedup within the delta and against the store."""
+    from ocr_spark.dedup import (
+        exact_digest,
+        exact_digests,
+        exact_duplicates_incremental,
+    )
+
+    committed = exact_digests(_df(
+        spark, [(1, "alpha beta")], "doc_id bigint, text string"
+    ))
+    delta = _df(spark, [
+        (10, None), (11, None), (12, None),
+        (13, "alpha beta"),                   # dup of committed 1
+        (14, "delta"), (15, "delta"),         # 14 canonical
+    ], "id bigint, text string").select(
+        "id",
+        F.when(F.col("text").isNotNull(), exact_digest(F.col("text")))
+        .alias("digest"),
+    )
+    rows = {
+        r.id: r for r in exact_duplicates_incremental(delta, committed)
+        .collect()
+    }
+    assert set(rows) == {10, 11, 12, 13, 14, 15}
+    for i in (10, 11, 12):
+        assert rows[i].kept and rows[i].new_canonical_id == i
+        assert rows[i].dup_of_committed is False
+    assert rows[13].dup_of_committed and not rows[13].kept
+    assert rows[14].kept and not rows[15].kept
+    assert rows[15].new_canonical_id == 14
+
+
 def test_mixture_sample_rejects_overflowing_budget():
     """Non-ANSI Spark wraps int64 overflow silently; the ppm arithmetic
     must refuse budgets past the exact bound instead (fires before any

@@ -354,3 +354,53 @@ def test_lsh_ann_pairs_one_join(spark, kw, n_aggregates):
     assert len(re.findall(node.format("Aggregate"), plan, re.M)) == (
         n_aggregates
     ), plan
+
+
+def test_store_probes_plan_as_hash_existence_joins(
+    spark, tmp_path, monkeypatch
+):
+    """Incremental exact dedup probes the committed store with hash
+    existence joins, never a BroadcastNestedLoopJoin (batch × store,
+    which is how a null-aware ``NOT IN`` plans): the operator's one
+    ``digest IN (store)`` against a parquet store, and in
+    ``_dedup_commit``'s verdict that probe plus the fresh-ids
+    ``id IN (store)``."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from ocr_spark.dedup import exact_digests, exact_duplicates_incremental
+    from ocr_spark.ingest import ingest_batch
+    from ocr_spark.tableio import ParquetManifestIO
+
+    def existence_joins(plan: str) -> list[str]:
+        assert "BroadcastNestedLoopJoin" not in plan
+        return re.findall(r"(\w+) ExistenceJoin\(", plan)
+
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("t"), (F.col("id") % 30).cast("string"))
+        .alias("text"),
+    )
+    io = ParquetManifestIO(str(tmp_path / "store"))
+    io.append(exact_digests(docs.filter("doc_id < 20")), "digests")
+    delta = docs.filter("doc_id >= 20")
+    plan = _plan(exact_duplicates_incremental(
+        exact_digests(delta), io.read(spark, "digests")
+    ))
+    assert existence_joins(plan) == ["BroadcastHashJoin"]
+
+    verdicts = []
+    frame = type(delta)     # the session's concrete DataFrame class
+    persist = frame.persist
+
+    def spy(self, *args, **kwargs):
+        if "stale" in self.columns:
+            verdicts.append(_plan(self))
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "persist", spy)
+    stats = ingest_batch(spark, delta, 1, io, str(tmp_path / "out"))
+    assert stats["docs_dropped"] == 10      # t20..t29 are new, t0..t9 not
+    assert len(verdicts) == 1
+    assert existence_joins(verdicts[0]) == ["BroadcastHashJoin"] * 2

@@ -214,7 +214,7 @@ def test_crash_before_store_commit_converges(
 
 @pytest.mark.parametrize(
     "make, jobs",
-    [(_exact_batches, 10), (_extract_batches, 17)],
+    [(_exact_batches, 10), (_extract_batches, 15)],
     ids=["ingest_batch", "extract_ingest_batch"],
 )
 def test_ingest_batch_spark_job_count(spark, tmp_path, make, jobs):
@@ -371,6 +371,35 @@ def test_null_text_rides_through(spark, tmp_path):
     assert set(kept) == {1, 2}          # 3 is an exact dup of 1
     assert kept[2] is None              # content-less row not dropped
     assert res["docs_in"] == 2          # digestable rows only
+
+
+def test_null_text_rows_each_kept_against_a_store(spark, tmp_path):
+    """Content-less rows are each their own group in the one-arm
+    verdict: against a store that already holds a batch, every NULL-text
+    row is kept (none grouped under one NULL digest, none dropped), next
+    to a dup of committed content that dies and a new text that
+    survives."""
+    io = ParquetManifestIO(str(tmp_path / "store"))
+    out = str(tmp_path / "out")
+    first = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma")], "doc_id bigint, text string"
+    )
+    ingest_batch(spark, first, 0, io, out)
+    second = spark.createDataFrame(
+        [(10, None), (11, None), (12, None),
+         (13, "ALPHA  beta"), (14, "delta")],
+        "doc_id bigint, text string",
+    )
+    res = ingest_batch(spark, second, 1, io, out)
+    kept = {
+        r.doc_id
+        for r in spark.read.parquet(out).filter("batch_id = 1")
+        .select("doc_id").collect()
+    }
+    assert kept == {10, 11, 12, 14}     # 13 dies against committed 1
+    assert res["docs_in"] == 2          # digestable rows only
+    assert res["docs_kept"] == 1 and res["docs_dropped"] == 1
+    assert io.read(spark, "digests").count() == 3  # no NULL digest
 
 
 def test_job_cli_two_synthetic_drops(tmp_path):
@@ -609,6 +638,41 @@ def test_extract_ingest_drops_cross_batch_content_dups(spark, tmp_path):
     # replay short-circuit on the committed tags
     io = ParquetManifestIO(str(tmp_path / "store"))
     assert len(io.tags("doc_digests")) == 2
+
+
+def test_extract_ingest_keeps_each_empty_span_doc(spark, tmp_path):
+    """Documents with an empty span array extract to an empty
+    ``spans_out`` — no content, a NULL digest — and each is kept on its
+    own (not grouped under one NULL digest, not dropped); ``docs_empty``
+    counts them."""
+    from ocr_spark.fixtures import SPANS_SCHEMA_DDL, corpus_dataframes
+    from ocr_spark.ingest import extract_ingest_batch
+
+    spans, media = corpus_dataframes(spark, seed=7, n_docs=6)
+    io = ParquetManifestIO(str(tmp_path / "store"))
+    out = str(tmp_path / "out")
+    extract_ingest_batch(
+        spark, spans.filter(F.col("doc_id") < F.lit("doc_000003")),
+        media, 0, io, out,
+    )
+    empty = spark.createDataFrame(
+        [("empty-1", []), ("empty-2", []), ("empty-3", [])],
+        SPANS_SCHEMA_DDL,
+    )
+    stats = extract_ingest_batch(
+        spark,
+        spans.filter(F.col("doc_id") >= F.lit("doc_000003"))
+        .unionByName(empty),
+        media, 1, io, out,
+    )
+    assert stats["docs_in"] == 6 and stats["docs_empty"] == 3
+    kept = {
+        r.doc_id
+        for r in spark.read.parquet(out).filter("batch_id = 1")
+        .select("doc_id").collect()
+    }
+    assert {"empty-1", "empty-2", "empty-3"} <= kept
+    assert len(kept) == 3 + stats["docs_kept"]
 
 
 def test_serialized_spans_null_for_empty_and_framed(spark):
